@@ -6,16 +6,21 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{HexDecodeUtf8, MinHashSig}
 
-/** SparkSessionExtensions entry point: makes the engine's native
-  * expressions first-class SQL functions — and the native as-of-join
-  * planner strategy a first-class operator — in any session built with
+/** SparkSessionExtensions entry point: injects the native as-of-join
+  * planner strategy, and the SQL names that SQL text uses
+  * (`hex_decode_utf8`, `minhash_sig`), into any session built with
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
   * (or `.withExtensions(new GraftExtensions)`). Runtime registration via
   * `HexDecodeUtf8.register` / `MinHashSig.register` /
   * `plans.AsOfJoinNative.ensureStrategy` remains available for
-  * sessions the caller doesn't construct (tests, notebooks). */
+  * sessions the caller doesn't construct (tests, notebooks).
+  *
+  * Every other native kernel has no SQL name: its `column` builder
+  * wraps the Catalyst expression itself (`GraftSqlBridge.column`), so
+  * the Column resolves in whichever session's plan it lands in and
+  * leaves no function-registry entry behind. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

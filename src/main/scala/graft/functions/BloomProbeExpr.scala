@@ -3,8 +3,7 @@ package graft.functions
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 
 /** Static probe kernel shared by interpreted eval and the generated
   * code. One md5 per key (Kirsch–Mitzenmacher double hashing, same
@@ -12,11 +11,6 @@ import org.apache.spark.sql.{Column, SparkSession}
   * DuckDB oracle twin), k bit tests against a driver-collected word
   * bitmap — no join, no shuffle, no per-bit row explosion. */
 object BloomProbeHelper {
-  private val md = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   private val prefix = "bloom:".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
 
   /** `true` iff all k Kirsch–Mitzenmacher bit positions of `key` are
@@ -29,15 +23,12 @@ object BloomProbeHelper {
     * 16, 10)` / `(9, 8)`. h1 + 6·h2 < 2^35, no overflow. */
   def probe(key: org.apache.spark.unsafe.types.UTF8String,
       words: Array[Long], k: Int, m: Int): Boolean = {
-    val d = md.get()
-    d.reset()
-    d.update(prefix)
-    d.update(key.getBytes)
-    val digest = d.digest()
-    val h1 = ((digest(0) & 0xffL) << 24) | ((digest(1) & 0xffL) << 16) |
-      ((digest(2) & 0xffL) << 8) | (digest(3) & 0xffL)
-    val h2 = ((digest(4) & 0xffL) << 24) | ((digest(5) & 0xffL) << 16) |
-      ((digest(6) & 0xffL) << 8) | (digest(7) & 0xffL)
+    val kb = key.getBytes
+    val in = java.util.Arrays.copyOf(prefix, prefix.length + kb.length)
+    System.arraycopy(kb, 0, in, prefix.length, kb.length)
+    val digest = Md5Hashing.digest(in, 0, in.length)
+    val h1 = Md5Hashing.u32(digest, 0)
+    val h2 = Md5Hashing.u32(digest, 4)
     var j = 0
     while (j < k) {
       val bit = ((h1 + j * h2) % m).toInt
@@ -85,19 +76,13 @@ case class BloomProbe(child: Expression, k: Int, m: Int,
 }
 
 object BloomProbe {
-  private val counter = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Column API, [[MultiMatch.column]]-style temp-function
-    * registration; the name carries a fresh counter so two sketches
-    * in one session never collide. The key is cast to string exactly
-    * as [[graft.llm.BloomFilter.bitPositions]] does, so any key type
-    * (the engine's 60-bit BIGINT window hashes, raw strings) digests
-    * identically in both probe forms and in the DuckDB oracle. */
-  def column(spark: SparkSession, key: Column, k: Int, m: Int,
-      bcast: Broadcast[Array[Long]]): Column = {
-    val name = s"bloom_probe_${counter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BloomProbe(exprs.head, k, m, bcast), "scala_udf")
-    call_function(name, key.cast("string"))
-  }
+  /** The key is cast to string exactly as
+    * [[graft.llm.BloomFilter.bitPositions]] does, so any key type (the
+    * engine's 60-bit BIGINT window hashes, raw strings) digests
+    * identically in both probe forms and in the DuckDB oracle. The
+    * column holds the broadcast itself, so it lives exactly as long
+    * as the plans that use it. */
+  def column(key: Column, k: Int, m: Int, bcast: Broadcast[Array[Long]]): Column =
+    GraftSqlBridge.column(
+      BloomProbe(GraftSqlBridge.expression(key.cast("string")), k, m, bcast))
 }

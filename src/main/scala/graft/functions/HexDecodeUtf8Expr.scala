@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen entry point for [[HexDecodeUtf8]] — a top-level object so
@@ -70,14 +70,13 @@ case class HexDecodeUtf8(child: Expression) extends UnaryExpression {
 }
 
 object HexDecodeUtf8 {
-  /** Idempotent per-session registration; afterwards the function is
-    * callable from SQL and via [[column]]. */
+  /** Idempotent per-session registration for SQL text in sessions
+    * built without [[graft.GraftExtensions]]; Column code uses
+    * [[column]], which needs no registration. */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "hex_decode_utf8", exprs => HexDecodeUtf8(exprs.head), "scala_udf")
 
-  def column(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("hex_decode_utf8", c)
-  }
+  def column(c: Column): Column =
+    GraftSqlBridge.column(HexDecodeUtf8(GraftSqlBridge.expression(c)))
 }

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Jaro-Winkler similarity (Jaro 1989; Winkler 1990) — the
@@ -100,11 +100,7 @@ case class JaroWinkler(left: Expression, right: Expression)
 }
 
 object JaroWinkler {
-  def column(spark: SparkSession, a: Column, b: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaro_winkler",
-      exprs => JaroWinkler(exprs.head, exprs(1)), "scala_udf")
-    org.apache.spark.sql.functions.call_function(
-      "graft_jaro_winkler", a, b)
-  }
+  def column(a: Column, b: Column): Column =
+    GraftSqlBridge.column(JaroWinkler(
+      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 }

@@ -6,8 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 
 /** Native Johnson–Lindenstrauss random projection over an embedding
   * column: `outDims` components, each the ascending-dim fold of
@@ -36,12 +35,7 @@ object JlProjectHelper {
     * under a JL-specific salt, so the projection matrix is independent
     * of the SRP bucketing hyperplanes ([[SrpBucketHelper.planeSign]]).
     * Single source of truth — the DuckDB oracle inlines these values. */
-  def jlSign(j: Int, d: Int): Double = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s"jl$j:$d".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    if ("89abcdef".indexOf(hex.charAt(0)) >= 0) 1.0 else -1.0
-  }
+  def jlSign(j: Int, d: Int): Double = Md5Hashing.sign(s"jl$j:$d")
 
   private val signCache =
     new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Double]]()
@@ -110,12 +104,5 @@ case class JlProject(child: Expression, outDims: Int = 16, dims: Int = 64)
 
 object JlProject {
   def column(emb: Column, outDims: Int = 16, dims: Int = 64): Column =
-    column(SparkSession.active, emb, outDims, dims)
-
-  def column(spark: SparkSession, emb: Column, outDims: Int, dims: Int): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"jl_project_${outDims}_$dims",
-      exprs => JlProject(exprs.head, outDims, dims), "scala_udf")
-    call_function(s"jl_project_${outDims}_$dims", emb)
-  }
+    GraftSqlBridge.column(JlProject(GraftSqlBridge.expression(emb), outDims, dims))
 }

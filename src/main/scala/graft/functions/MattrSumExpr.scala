@@ -5,7 +5,7 @@ import java.util.regex.Pattern
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native MATTR numerator: the summed distinct-type count over every
@@ -84,10 +84,6 @@ case class MattrSum(child: Expression, w: Int) extends UnaryExpression {
 }
 
 object MattrSum {
-  def column(spark: SparkSession, c: Column, w: Int): Column = {
-    val name = s"mattr_sum_$w"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => MattrSum(exprs.head, w), "scala_udf")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  def column(c: Column, w: Int): Column =
+    GraftSqlBridge.column(MattrSum(GraftSqlBridge.expression(c), w))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared allocation-free MD5 plumbing for the digest-derived hash
@@ -33,6 +33,12 @@ object Md5Hashing {
     val md = Md5.get(); val out = Out.get()
     md.reset(); md.update(bytes, off, len); md.digest(out, 0, 16); out
   }
+
+  /** Digest bytes i..i+3 as one unsigned big-endian int — bit-identical
+    * to conv(substring(md5(x), 2i+1, 8), 16, 10). */
+  def u32(d: Array[Byte], i: Int): Long =
+    ((d(i) & 0xFFL) << 24) | ((d(i + 1) & 0xFFL) << 16) |
+      ((d(i + 2) & 0xFFL) << 8) | (d(i + 3) & 0xFFL)
 
   /** First 15 hex chars of the digest as one 60-bit positive long —
     * bit-identical to conv(substring(md5(x),1,15),16,10). */
@@ -68,12 +74,23 @@ object Md5Hashing {
     val b = input.getBytes
     h60(digest(b, 0, b.length))
   }
+
+  /** Deterministic ±1 from md5(salt): +1 iff the digest's first hex
+    * char is one of "89abcdef" (its top bit is set). The sign source
+    * of the SRP hyperplanes and the JL projection matrix — the DuckDB
+    * oracles inline the same values. */
+  def sign(salt: String): Double = {
+    val b = salt.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    if ((digest(b, 0, b.length)(0) & 0x80) != 0) 1.0 else -1.0
+  }
 }
 
 /** Native `md5prefix60(str)` → Long in [0, 2^60): the engine's
   * portable string hash (= Dedup.shingleHash) without the hex-string
   * detour. */
-case class Md5Prefix60(child: Expression) extends UnaryExpression {
+case class Md5Prefix60(child: Expression)
+  extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "md5prefix60"
 
@@ -90,11 +107,8 @@ case class Md5Prefix60(child: Expression) extends UnaryExpression {
 }
 
 object Md5Prefix60 {
-  def column(spark: SparkSession, c: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5prefix60", exprs => Md5Prefix60(exprs.head), "scala_udf")
-    org.apache.spark.sql.functions.call_function("md5prefix60", c)
-  }
+  def column(c: Column): Column =
+    GraftSqlBridge.column(Md5Prefix60(GraftSqlBridge.expression(c)))
 }
 
 /** Native distinct hashed shingle set: `hashed_shingles(text, k)` →
@@ -136,7 +150,8 @@ object HashedShinglesHelper {
 }
 
 case class HashedShingles(child: Expression, shingleLen: Int = 5)
-  extends UnaryExpression {
+  extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def nullable: Boolean = false
   override def prettyName: String = "hashed_shingles"
@@ -163,10 +178,6 @@ case class HashedShingles(child: Expression, shingleLen: Int = 5)
 }
 
 object HashedShingles {
-  def column(spark: SparkSession, c: Column, k: Int = 5): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"hashed_shingles_$k",
-      exprs => HashedShingles(exprs.head, k), "scala_udf")
-    org.apache.spark.sql.functions.call_function(s"hashed_shingles_$k", c)
-  }
+  def column(c: Column, k: Int = 5): Column =
+    GraftSqlBridge.column(HashedShingles(GraftSqlBridge.expression(c), k))
 }

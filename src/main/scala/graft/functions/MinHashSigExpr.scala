@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen entry point for [[MinHashSig]]. One MD5 per shingle, all
@@ -32,11 +31,9 @@ object MinHashSigHelper {
       val end = offs(math.min(i + shingleLen, nChars))
       val d = Md5Hashing.digest(bytes, start, end - start)
       // first/second 4 digest bytes as unsigned big-endian ints ==
-      // parseInt(hex(digest)[0:8]/[8:16], 16) == conv(substr(md5,..),16,10)
-      val a = ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) |
-        ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
-      val b = ((d(4) & 0xFFL) << 24) | ((d(5) & 0xFFL) << 16) |
-        ((d(6) & 0xFFL) << 8) | (d(7) & 0xFFL)
+      // conv(substr(md5, 1|9, 8), 16, 10)
+      val a = Md5Hashing.u32(d, 0)
+      val b = Md5Hashing.u32(d, 4)
       var j = 0
       while (j < k) {
         val h = (a + j * b) % P
@@ -73,16 +70,15 @@ case class MinHashSig(child: Expression, numHashes: Int = 12, shingleLen: Int = 
 }
 
 object MinHashSig {
+  /** Idempotent per-session registration for SQL text in sessions
+    * built without [[graft.GraftExtensions]]; Column code uses
+    * [[column]], which needs no registration. */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "minhash_sig", exprs => MinHashSig(exprs.head), "scala_udf")
 
-  def column(spark: SparkSession, c: Column, numHashes: Int = 12): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"minhash_sig_$numHashes",
-      exprs => MinHashSig(exprs.head, numHashes), "scala_udf")
-    org.apache.spark.sql.functions.call_function(s"minhash_sig_$numHashes", c)
-  }
+  def column(c: Column, numHashes: Int = 12): Column =
+    GraftSqlBridge.column(MinHashSig(GraftSqlBridge.expression(c), numHashes))
 }
 
 /** Combined pass for the LSH pipeline: ONE digest per shingle yields
@@ -108,24 +104,15 @@ object MinHashShinglesHelper {
       val start = offs(i)
       val end = offs(math.min(i + shingleLen, nChars))
       val d = Md5Hashing.digest(bytes, start, end - start)
-      val a = ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) |
-        ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
-      val b = ((d(4) & 0xFFL) << 24) | ((d(5) & 0xFFL) << 16) |
-        ((d(6) & 0xFFL) << 8) | (d(7) & 0xFFL)
+      val a = Md5Hashing.u32(d, 0)
+      val b = Md5Hashing.u32(d, 4)
       var j = 0
       while (j < k) {
         val h = (a + j * b) % MinHashSigHelper.P
         if (h < mins(j)) mins(j) = h
         j += 1
       }
-      // first 15 hex chars of the digest as one 60-bit positive long —
-      // bit-identical to conv(substring(md5(x),1,15),16,10) and to
-      // DuckDB's ('0x'||substr(md5(x),1,15))::BIGINT
-      val h60 = ((d(0) & 0xFFL) << 52) | ((d(1) & 0xFFL) << 44) |
-        ((d(2) & 0xFFL) << 36) | ((d(3) & 0xFFL) << 28) |
-        ((d(4) & 0xFFL) << 20) | ((d(5) & 0xFFL) << 12) |
-        ((d(6) & 0xFFL) << 4) | ((d(7) & 0xF0L) >>> 4)
-      seen.add(h60)
+      seen.add(Md5Hashing.h60(d))
       i += 1
     }
     val sh = new Array[Long](seen.size)
@@ -136,8 +123,9 @@ object MinHashShinglesHelper {
 }
 
 case class MinHashShingles(child: Expression, numHashes: Int = 12, shingleLen: Int = 5)
-  extends UnaryExpression {
+  extends UnaryExpression with ExpectsInputTypes {
   import org.apache.spark.sql.types.{StructField, StructType}
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = StructType(Seq(
     StructField("sig", ArrayType(LongType, containsNull = false), nullable = false),
     StructField("sh", ArrayType(LongType, containsNull = false), nullable = false)))
@@ -157,10 +145,10 @@ case class MinHashShingles(child: Expression, numHashes: Int = 12, shingleLen: I
 }
 
 object MinHashShingles {
-  def column(spark: SparkSession, c: Column, numHashes: Int = 12): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"minhash_shingles_$numHashes",
-      exprs => MinHashShingles(exprs.head, numHashes), "scala_udf")
-    org.apache.spark.sql.functions.call_function(s"minhash_shingles_$numHashes", c)
-  }
+  def column(c: Column, numHashes: Int): Column =
+    GraftSqlBridge.column(MinHashShingles(GraftSqlBridge.expression(c), numHashes))
+
+  /** Source-compatible form for existing callers; `spark` is unused. */
+  def column(spark: SparkSession, c: Column, numHashes: Int = 12): Column =
+    column(c, numHashes)
 }

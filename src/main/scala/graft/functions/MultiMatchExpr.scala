@@ -4,8 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Aho-Corasick automaton over the lowercased text, built ONCE on the
@@ -131,20 +130,7 @@ case class MultiMatch(child: Expression, auto: AhoAutomaton)
 }
 
 object MultiMatch {
-  /** Column API, [[DotProduct.column]]-style temp-function
-    * registration. The function name carries a digest of the pattern
-    * list so two different blocklists in one session never collide. */
   def column(text: Column, patterns: Seq[String]): Column =
-    column(SparkSession.active, text, patterns)
-
-  def column(spark: SparkSession, text: Column, patterns: Seq[String]): Column = {
-    val auto = new AhoAutomaton(patterns)
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(patterns.mkString("\u0000").getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
-    val name = s"multi_match_$digest"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => MultiMatch(exprs.head, auto), "scala_udf")
-    call_function(name, text)
-  }
+    GraftSqlBridge.column(
+      MultiMatch(GraftSqlBridge.expression(text), new AhoAutomaton(patterns)))
 }

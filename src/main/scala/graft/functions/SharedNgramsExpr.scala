@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static entry point for generated code: count of DISTINCT word
@@ -73,4 +74,9 @@ case class SharedNgrams(child: Expression,
 
   override protected def withNewChildInternal(newChild: Expression): SharedNgrams =
     copy(child = newChild)
+}
+
+object SharedNgrams {
+  def column(text: Column, evalSet: java.util.HashSet[String], n: Int): Column =
+    GraftSqlBridge.column(SharedNgrams(GraftSqlBridge.expression(text), evalSet, n))
 }

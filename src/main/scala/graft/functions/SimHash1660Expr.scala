@@ -1,23 +1,31 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 
-/** Combined pass for the composed-dedup fingerprint prep: ONE md5 per
-  * token yields BOTH the 16-bit sort-key simhash ([[SimHash16]]) and
-  * the 60-bit Manku fingerprint ([[SimHash60]]). The split
-  * formulation digests every token twice — and the digest is the
-  * whole cost of a simhash — so the shared prep of the three-blocker
-  * pipeline (blockedPairs / incremental batch prep / streaming
-  * admission) was paying the token-digest pass twice for bit votes
-  * that read from the same 16 digest bytes. Vote rules are the two
-  * helpers' verbatim (null token: no votes, stays in the denominator;
-  * bit set ⇔ 2·votes ≥ n), so both fields are bit-identical to the
-  * split expressions — LlmSpec asserts it. */
+/** SimHash over a token array, ONE md5 per token, both widths read
+  * from the same 16 digest bytes (the digest is the whole cost of a
+  * simhash):
+  *
+  *  - `sh16`: the 16-bit locality SORT key — bit j is set by hex char
+  *    j of md5(token) being one of "89abcdef"; value-identical to the
+  *    HOF formulation graft.llm.Dedup.simhash16 (LlmSpec pins it),
+  *    which re-digests each token once per bit.
+  *  - `sh60`: the 60-bit Manku-Jain-Das Sarma fingerprint (WWW'07)
+  *    whose blocks pigeonhole near-duplicates — bit j is bit
+  *    (3 − j mod 4) of hex nibble ⌊j/4⌋, i.e. the first 15 hex chars
+  *    of md5(token) read big-endian nibble-wise, the md5-prefix family
+  *    of the 60-bit shingle hashes (DuckDB replays it with
+  *    strpos('0123456789abcdef', …) arithmetic).
+  *
+  * Vote rule for both: a null token casts no votes but stays in the
+  * denominator (the HOF form's md5(null) → null drops it from the
+  * filter while size(toks) still counts it); bit set ⇔ 2·votes ≥ n.
+  * Callers that need one width project it (`getField("sh16")`). */
 object SimHash1660Helper {
   def hash(toks: ArrayData): InternalRow = {
     val n = toks.numElements()
@@ -64,7 +72,9 @@ object SimHash1660Helper {
   }
 }
 
-case class SimHash1660(child: Expression) extends UnaryExpression {
+case class SimHash1660(child: Expression)
+  extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(StringType))
   override def dataType: DataType = StructType(Seq(
     StructField("sh16", LongType, nullable = false),
     StructField("sh60", LongType, nullable = false)))
@@ -83,9 +93,6 @@ case class SimHash1660(child: Expression) extends UnaryExpression {
 }
 
 object SimHash1660 {
-  def column(spark: SparkSession, tokens: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash1660", exprs => SimHash1660(exprs.head), "scala_udf")
-    org.apache.spark.sql.functions.call_function("simhash1660", tokens)
-  }
+  def column(tokens: Column): Column =
+    GraftSqlBridge.column(SimHash1660(GraftSqlBridge.expression(tokens)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 
 /** Intersection SIZE of two SORTED long arrays by a single primitive
   * merge pass — the verification kernel for set-similarity joins.
@@ -36,7 +36,9 @@ object SortedIntersectCountHelper {
 
 /** Native `sorted_intersect_count(a, b)` → Long. */
 case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes =
+    Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = LongType
   override def prettyName: String = "sorted_intersect_count"
 
@@ -58,11 +60,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 }
 
 object SortedIntersectCount {
-  def column(spark: SparkSession, a: Column, b: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs.head, exprs(1)), "scala_udf")
-    org.apache.spark.sql.functions.call_function(
-      "sorted_intersect_count", a, b)
-  }
+  def column(a: Column, b: Column): Column =
+    GraftSqlBridge.column(SortedIntersectCount(
+      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 }

@@ -7,8 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 
 /** Native sign-random-projection bucket id over an embedding column.
   *
@@ -31,12 +30,7 @@ object SrpBucketHelper {
     * dim d): ±1 from one md5 nibble — reproducible on any engine or
     * cluster size (single source of truth; `Similarity.planeSign`
     * delegates here, and the DuckDB oracle inlines these values). */
-  def planeSign(p: Int, d: Int): Double = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s"plane$p:$d".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    if ("89abcdef".indexOf(hex.charAt(0)) >= 0) 1.0 else -1.0
-  }
+  def planeSign(p: Int, d: Int): Double = Md5Hashing.sign(s"plane$p:$d")
 
   private val signCache =
     new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Double]]()
@@ -115,17 +109,6 @@ case class SrpBucket(child: Expression, bits: Int = 8, dims: Int = 64)
 }
 
 object SrpBucket {
-  /** Registers in `SparkSession.active` — fine for the common
-    * single-session case; pass the DataFrame's own session via the
-    * other overload when sessions are isolated (`spark.newSession()`),
-    * or the analyzer of the owning session won't see the function. */
   def column(emb: Column, bits: Int = 8, dims: Int = 64): Column =
-    column(SparkSession.active, emb, bits, dims)
-
-  def column(spark: SparkSession, emb: Column, bits: Int, dims: Int): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"srp_bucket_${bits}_$dims",
-      exprs => SrpBucket(exprs.head, bits, dims), "scala_udf")
-    call_function(s"srp_bucket_${bits}_$dims", emb)
-  }
+    GraftSqlBridge.column(SrpBucket(GraftSqlBridge.expression(emb), bits, dims))
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass winnowing kernel (Schleimer-Wilkerson-Aiken, MOSS): word
@@ -37,14 +37,6 @@ object WinnowFingerprintsHelper {
   private val Ws = Pattern.compile("\\s+")
   private val HexDigits = "0123456789abcdef".toCharArray
 
-  // one digest per thread, not per document: the JCA provider lookup
-  // rivals the hashing itself on short docs (reset() runs per gram,
-  // so reuse across rows is safe)
-  private val Md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   def eval(text: UTF8String, k: Int, w: Int): InternalRow = {
     val s = text.trim().toLowerCase.toString
     val toks = Ws.split(s, -1)
@@ -52,7 +44,6 @@ object WinnowFingerprintsHelper {
     val g = n - k + 1
     if (g <= 0)
       return InternalRow(0L, new GenericArrayData(Array.emptyLongArray))
-    val md = Md5.get()
     val sb = new java.lang.StringBuilder
     val hashes = new Array[Long](g)
     var i = 0
@@ -64,14 +55,10 @@ object WinnowFingerprintsHelper {
         sb.append(toks(i + j))
         j += 1
       }
-      val digest = md.digest(sb.toString.getBytes("UTF-8"))
-      // first 15 hex chars = high 60 bits: bytes 0..6 full + byte 7's
-      // high nibble, assembled without the hex-string round-trip
-      var h = 0L
-      var b = 0
-      while (b < 7) { h = (h << 8) | (digest(b) & 0xffL); b += 1 }
-      h = (h << 4) | ((digest(7) & 0xf0L) >> 4)
-      hashes(i) = h
+      // first 15 hex chars = high 60 bits, read from the digest bytes
+      // without the hex-string round-trip
+      val b = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      hashes(i) = Md5Hashing.h60(Md5Hashing.digest(b, 0, b.length))
       i += 1
     }
     val nWin = math.max(g - w + 1, 1)
@@ -125,10 +112,6 @@ case class WinnowFingerprints(child: Expression, k: Int = 4, w: Int = 4)
 }
 
 object WinnowFingerprints {
-  def column(spark: SparkSession, c: Column, k: Int = 4, w: Int = 4): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"winnow_fp_${k}_$w",
-      exprs => WinnowFingerprints(exprs.head, k, w), "scala_udf")
-    org.apache.spark.sql.functions.call_function(s"winnow_fp_${k}_$w", c)
-  }
+  def column(c: Column, k: Int = 4, w: Int = 4): Column =
+    GraftSqlBridge.column(WinnowFingerprints(GraftSqlBridge.expression(c), k, w))
 }

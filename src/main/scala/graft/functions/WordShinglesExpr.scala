@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native word n-gram builder: the hot first stage of every
@@ -87,11 +87,6 @@ case class WordShingles(child: Expression, n: Int, distinct: Boolean = false)
 }
 
 object WordShingles {
-  def column(spark: SparkSession, c: Column, n: Int,
-      distinct: Boolean = false): Column = {
-    val name = s"word_shingles_$n${if (distinct) "_d" else ""}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => WordShingles(exprs.head, n, distinct), "scala_udf")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  def column(c: Column, n: Int, distinct: Boolean = false): Column =
+    GraftSqlBridge.column(WordShingles(GraftSqlBridge.expression(c), n, distinct))
 }

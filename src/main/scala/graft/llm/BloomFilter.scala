@@ -103,7 +103,7 @@ object BloomFilter {
       keyCol: Column, k: Int = 7, m: Int = 1 << 24): DataFrame = {
     val bcast = broadcastWords(sketch, m)
     items.select(col(idCol),
-      graft.functions.BloomProbe.column(items.sparkSession, keyCol, k, m, bcast)
+      graft.functions.BloomProbe.column(keyCol, k, m, bcast)
         .as("might_contain"))
   }
 
@@ -152,8 +152,8 @@ object BloomFilter {
     // DISTINCT (id, wh): distinct windows are the right unit for "how
     // much of this doc was seen before" (and what the oracle counts)
     val batchWins = windows(batch).distinct()
-      .withColumn("bloom_hit", graft.functions.BloomProbe.column(
-        batch.sparkSession, col("wh"), k, m, bcast))
+      .withColumn("bloom_hit",
+        graft.functions.BloomProbe.column(col("wh"), k, m, bcast))
     val exact = exWins.withColumn("__seen", lit(1))
     batchWins.join(exact, Seq("wh"), "left")
       .groupBy(col(idCol))

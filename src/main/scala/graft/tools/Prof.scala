@@ -42,12 +42,12 @@ object Prof {
       }
       time("q23.minhash-par") {
         docs.repartition(par)
-          .select(graft.functions.MinHashSig.column(spark, col("text"), 12)
+          .select(graft.functions.MinHashSig.column(col("text"), 12)
             .as("sig")).agg(sum(size(col("sig")))).collect()
       }
       val base = docs.repartition(par).select(col("doc_id").as("id"),
         Dedup.hashedShingles(col("text")).as("sh"),
-        graft.functions.MinHashSig.column(spark, col("text"), 12).as("sig")).persist()
+        graft.functions.MinHashSig.column(col("text"), 12).as("sig")).persist()
       time("q23.base-materialize") { base.count() }
       val sigs = base.select(col("id"), col("sig"))
       val banded = sigs.select(col("id"),
@@ -133,8 +133,7 @@ object Prof {
       val withSets = cands
         .join(base.select(col("id").as("__ia"), col("shs").as("__sa")), Seq("__ia"))
         .join(base.select(col("id").as("__ib"), col("shs").as("__sb")), Seq("__ib"))
-      val inter = graft.functions.SortedIntersectCount.column(spark,
-        col("__sa"), col("__sb"))
+      val inter = graft.functions.SortedIntersectCount.column(col("__sa"), col("__sb"))
       val jac = inter.cast("double") /
         (size(col("__sa")) + size(col("__sb")) - inter).cast("double")
       time("q278.verify") {

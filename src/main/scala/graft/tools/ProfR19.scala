@@ -72,15 +72,13 @@ object ProfR19 {
     if (what == "q256" || what == "dedup") {
       import graft.llm.Dedup
       val docs = t("documents")
-      val sp = spark
-      val par = sp.sparkContext.defaultParallelism
+      val par = spark.sparkContext.defaultParallelism
       val toks = graft.llm.TextAnalysis.tokens(col("text"))
       val prep = docs.repartition(par).select(col("doc_id").as("id"),
-          graft.functions.MinHashShingles.column(sp, col("text"), 12).as("ms"),
-          graft.functions.SimHash16.column(sp, toks).as("sh16"),
-          graft.functions.SimHash60.column(sp, toks).as("sh60"))
+          graft.functions.MinHashShingles.column(col("text"), 12).as("ms"),
+          graft.functions.SimHash1660.column(toks).as("sh"))
         .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("shs"),
-          col("sh16"), col("sh60"))
+          col("sh.sh16").as("sh16"), col("sh.sh60").as("sh60"))
         .persist()
       time("q256.prep-materialize") { prep.count() }
       // the three public blockers (the replicas inside
@@ -118,15 +116,13 @@ object ProfR19 {
       def cl = spark.read.parquet(s"$idx/clusters")
       time("q292.artifact-read-counts") {
         (sig.count(), sk.count(), fp.count(), pl.count(), cl.count()) }
-      val sp = spark
-      val par = sp.sparkContext.defaultParallelism
+      val par = spark.sparkContext.defaultParallelism
       val toks = graft.llm.TextAnalysis.tokens(col("text"))
       val prep = batch.repartition(par).select(col("doc_id").as("id"),
-          graft.functions.MinHashShingles.column(sp, col("text"), 12).as("ms"),
-          graft.functions.SimHash16.column(sp, toks).as("sh16"),
-          graft.functions.SimHash60.column(sp, toks).as("sh60"))
+          graft.functions.MinHashShingles.column(col("text"), 12).as("ms"),
+          graft.functions.SimHash1660.column(toks).as("sh"))
         .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("shs"),
-          col("sh16"), col("sh60"))
+          col("sh.sh16").as("sh16"), col("sh.sh60").as("sh60"))
         .persist()
       time("q292.batch-prep") { prep.count() }
       val newSigs = prep.select(col("id"), col("sig"), col("shs").as("sh"))
@@ -159,10 +155,9 @@ object ProfR19 {
     if (what == "q262") {
       import graft.llm.Dedup
       val docs = t("documents")
-      val sp = spark
       val base = docs.repartition(32).select(col("doc_id").as("id"),
           graft.functions.MinHashShingles
-            .column(sp, col("text"), 12).as("ms"))
+            .column(col("text"), 12).as("ms"))
         .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("sh"))
         .withColumn("bh", Dedup.bandHashesLong(col("sig"), 4, 3))
         .persist()

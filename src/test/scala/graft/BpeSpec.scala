@@ -77,7 +77,7 @@ class BpeSpec extends AnyFunSuite {
   test("codegen'd bpe_encode equals driver-side encodeText, and counts are sane") {
     val docs = Tables.load(spark, dir, "documents").limit(50).cache()
     val codec = Bpe.trainOnCorpus(docs, "text", 20)
-    val enc = Bpe.encodeColumn(spark, codec, col("text"))
+    val enc = Bpe.encodeColumn(codec, col("text"))
     val rows = docs.select(col("doc_id"), col("text"), enc.as("toks")).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -122,7 +122,7 @@ class BpeSpec extends AnyFunSuite {
       .select(explode(split(trim(lower(col("text"))), "\\s+")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
     val codec = new BpeCodec(Bpe.train(wc, 6).toArray)
-    val enc = Bpe.encodeColumn(spark, codec, col("text"))
+    val enc = Bpe.encodeColumn(codec, col("text"))
     val got = docs.select(col("lang"),
         size(split(trim(lower(col("text"))), "\\s+")).cast("long").as("ws"),
         size(enc).cast("long").as("bpe"))

@@ -150,8 +150,8 @@ class FunctionsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val df = Seq(("martha", "marhta"), ("ab", "ba"), ("x", "x"))
       .toDF("a", "b")
-    val got = df.select(graft.functions.JaroWinkler.column(spark,
-      col("a"), col("b"))).collect().map(_.getDouble(0)).toSeq
+    val got = df.select(graft.functions.JaroWinkler.column(col("a"), col("b")))
+      .collect().map(_.getDouble(0)).toSeq
     assert(got == Seq(0.9611111111111111, 0.0, 1.0))
   }
 
@@ -171,9 +171,9 @@ class FunctionsSpec extends AnyFunSuite {
         array_distinct(col("a")).as("ad"), array_distinct(col("b")).as("bd"))
     val out = df.select(
       size(array_intersect(col("a"), col("b"))).cast("long").as("ref"),
-      graft.functions.IntersectCountLong.column(spark, col("a"), col("b")).as("nat"),
+      graft.functions.IntersectCountLong.column(col("a"), col("b")).as("nat"),
       size(array_intersect(col("ad"), col("bd"))).cast("long").as("refd"),
-      graft.functions.IntersectCountLong.column(spark, col("ad"), col("bd")).as("natd"))
+      graft.functions.IntersectCountLong.column(col("ad"), col("bd")).as("natd"))
       .collect()
     out.foreach { r =>
       assert(r.getLong(0) == r.getLong(1), r.toString)
@@ -185,16 +185,69 @@ class FunctionsSpec extends AnyFunSuite {
       .toDF("a", "b")
       .select(
         size(array_intersect(col("a"), col("b"))).cast("long").as("ref"),
-        graft.functions.IntersectCountLong.column(spark, col("a"), col("b")).as("nat"))
+        graft.functions.IntersectCountLong.column(col("a"), col("b")).as("nat"))
       .collect()
     e.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
     // null array -> null, matching size(array_intersect)=null semantics
     val n = Seq(Tuple1(Seq(1L))).toDF("a")
       .select(
         size(array_intersect(col("a"), lit(null).cast("array<long>"))).as("ref"),
-        graft.functions.IntersectCountLong.column(spark, col("a"),
+        graft.functions.IntersectCountLong.column(col("a"),
           lit(null).cast("array<long>")).as("nat"))
       .collect()(0)
     assert(n.isNullAt(0) && n.isNullAt(1))
+  }
+
+  test("intersect_count_long rejects array<int> inputs when the frame is built") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val df = Seq((Seq(1, 2), Seq(2, 3))).toDF("a", "b")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(graft.functions.IntersectCountLong.column(col("a"), col("b")))
+    }
+  }
+
+  test("kernel columns leave the session's function registry unchanged") {
+    import graft.llm.{BloomFilter, Bpe, Dedup, TextAnalysis}
+    import org.apache.spark.sql.functions.col
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val registry = spark.sessionState.functionRegistry
+    def names = registry.listFunction().map(_.unquotedString).sorted
+    val before = names
+    val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "lorem ipsum dolor sit amet consectetur")).toDF("doc_id", "text")
+    val codec = Bpe.trainOnCorpus(docs, "text", 5)
+    val sketch = BloomFilter.build(docs, col("text"), k = 3, m = 1 << 10)
+    Seq(
+      BloomFilter.mightContain(sketch, docs, "doc_id", col("text"), 3, 1 << 10),
+      TextAnalysis.blocklist(docs, "doc_id", "text", Seq("fox", "amet")),
+      docs.select(Bpe.encodeColumn(codec, col("text"))),
+      TextAnalysis.contaminatedDocsFast(docs, docs, "doc_id", "text", n = 3),
+      docs.select(Dedup.hashedShingles(col("text"))),
+      docs.select(graft.functions.SimHash1660.column(TextAnalysis.tokens(col("text")))))
+      .foreach(df => assert(df.collect().nonEmpty))
+    assert(names == before)
+  }
+
+  test("kernel columns built under one session resolve in another") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import org.apache.spark.sql.functions.col
+    val spark = TestSpark.spark
+    val s2 = spark.newSession()
+    // built while `spark` is the active session
+    val srp = graft.functions.SrpBucket.column(col("emb"))
+    val shs = graft.llm.Dedup.hashedShingles(col("text"))
+    val rows = (1 to 4).map(i => (i.toLong,
+      Seq.tabulate(64)(d => math.sin(i * (d + 1)).toFloat), s"document number $i"))
+    def run(s: SparkSession): Seq[(Long, Long, Seq[Long])] = {
+      val df: DataFrame = s.createDataFrame(rows).toDF("id", "emb", "text")
+      df.select(col("id"), srp, shs).orderBy("id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toSeq)).toSeq
+    }
+    val onS2 = run(s2)
+    assert(onS2.map(_._2).distinct.size > 1, s"degenerate buckets: $onS2")
+    assert(onS2 == run(spark))
   }
 }

@@ -28,7 +28,7 @@ class HexExprSpec extends AnyFunSuite {
   test("native expression matches scalar reference on a mixed corpus") {
     import spark.implicits._
     val df = cases.toDF("h")
-      .select(col("h"), HexDecodeUtf8.column(spark, col("h")).as("native"))
+      .select(col("h"), HexDecodeUtf8.column(col("h")).as("native"))
     val got = df.collect().map(r => r.getString(0) -> Option(r.getString(1))).toMap
     for (h <- cases) {
       val expected = Option(GraftFunctions.hexDecodeUtf8Strict(h))
@@ -42,7 +42,7 @@ class HexExprSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     try {
       val df = cases.toDF("h")
-        .select(col("h"), HexDecodeUtf8.column(spark, col("h")).as("native"))
+        .select(col("h"), HexDecodeUtf8.column(col("h")).as("native"))
       val got = df.collect().map(r => r.getString(0) -> Option(r.getString(1))).toMap
       for (h <- cases)
         assert(got(h) == Option(GraftFunctions.hexDecodeUtf8Strict(h)), s"input '$h'")

@@ -72,7 +72,7 @@ class LlmSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val viaExpr = df
       .select(col("doc_id"),
-        concat_ws(",", graft.functions.MinHashSig.column(spark, col("text"), 12)).as("sig"))
+        concat_ws(",", graft.functions.MinHashSig.column(col("text"), 12)).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(viaColumn == viaBulk)
     assert(viaColumn == viaExpr)
@@ -111,8 +111,8 @@ class LlmSpec extends AnyFunSuite {
   test("native simhash16 is value-identical to the HOF formulation on real docs") {
     val both = docs.select(
       Dedup.simhash16(col("text")).as("hof"),
-      graft.functions.SimHash16
-        .column(spark, TextAnalysis.tokens(col("text"))).as("nat"))
+      graft.functions.SimHash1660.column(TextAnalysis.tokens(col("text")))
+        .getField("sh16").as("nat"))
       .collect()
     assert(both.nonEmpty)
     both.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
@@ -151,22 +151,32 @@ class LlmSpec extends AnyFunSuite {
     assert(n.isNullAt(4) && n.isNullAt(5))
   }
 
-  test("native simhash1660 combined pass is value-identical to the split simhash16/simhash60 expressions") {
+  test("native simhash1660 sh60 equals the md5-nibble reference") {
     import spark.implicits._
+    // bit j of the 60-bit fingerprint is bit (3 - j % 4) of hex char
+    // j / 4 of md5(token), set when at least half the tokens vote for it
+    def sh60Ref(toks: Seq[String]): Long = {
+      val votes = new Array[Int](60)
+      for (t <- toks) {
+        val hex = java.security.MessageDigest.getInstance("MD5")
+          .digest(t.getBytes("UTF-8")).map("%02x".format(_)).mkString
+        for (j <- 0 until 60)
+          if (((Character.digit(hex.charAt(j / 4), 16) >> (3 - j % 4)) & 1) == 1)
+            votes(j) += 1
+      }
+      (0 until 60).foldLeft(0L)((acc, j) =>
+        if (votes(j) * 2 >= toks.size) acc | (1L << j) else acc)
+    }
     val edge = Seq((100001L, ""), (100002L, "one"),
       (100003L, "héllo wörld ✓ unicode mixed ascii")).toDF("doc_id", "text")
     for (df <- Seq(docs.select(col("doc_id"), col("text")), edge)) {
       val toks = TextAnalysis.tokens(col("text"))
-      val both = df.select(
-        graft.functions.SimHash16.column(spark, toks).as("s16"),
-        graft.functions.SimHash60.column(spark, toks).as("s60"),
-        graft.functions.SimHash1660.column(spark, toks).as("c"))
-        .select(col("s16"), col("s60"), col("c.sh16"), col("c.sh60"))
+      val rows = df.select(toks.as("toks"),
+        graft.functions.SimHash1660.column(toks).getField("sh60").as("sh60"))
         .collect()
-      assert(both.nonEmpty)
-      both.foreach { r =>
-        assert(r.getLong(0) == r.getLong(2), r.toString)
-        assert(r.getLong(1) == r.getLong(3), r.toString)
+      assert(rows.nonEmpty)
+      rows.foreach { r =>
+        assert(r.getLong(1) == sh60Ref(r.getSeq[String](0)), r.toString)
       }
     }
   }
@@ -250,26 +260,6 @@ class LlmSpec extends AnyFunSuite {
       .collect().map(_.getString(0))
     out.zip(cases).foreach { case (got, (in, want)) =>
       assert(got == want, s"canonicalize($in)") }
-  }
-
-  test("native jaccard_shingles equals the array formulation") {
-    import spark.implicits._
-    val texts = Seq(
-      ("the quick brown fox", "the quick brown dog"),
-      ("identical text here", "identical text here"),
-      ("completely different", "nothing in common!!"),
-      ("héllo wörld ✓", "héllo wörld ✗"),
-      ("tiny", "tin"))
-    val df = texts.toDF("a", "b")
-    val viaArrays = df.select(
-      Dedup.jaccard(Dedup.shingles(col("a")), Dedup.shingles(col("b"))).as("j"))
-      .collect().map(_.getDouble(0))
-    val viaExpr = df.select(
-      graft.functions.JaccardShingles.column(spark, col("a"), col("b")).as("j"))
-      .collect().map(_.getDouble(0))
-    assert(viaArrays.sameElements(viaExpr),
-      s"${viaArrays.toSeq} != ${viaExpr.toSeq}")
-    assert(viaExpr(1) == 1.0)
   }
 
   test("brute-force topk: k rows per query, descending cosine, no self") {
@@ -1370,7 +1360,17 @@ class LlmSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     // reference: engine simhash values, driver-side sort + window walk,
-    // the SAME shingle-jaccard kernel
+    // exact Jaccard of the distinct 5-code-point shingle sets
+    def shingleJaccard(a: String, b: String, k: Int = 5): Double = {
+      def sh(s: String): Set[String] = {
+        val cps = s.codePoints().toArray
+        (0 until math.max(cps.length - k + 1, 1))
+          .map(i => new String(cps, i, math.min(k, cps.length - i))).toSet
+      }
+      val (sa, sb) = (sh(a), sh(b))
+      val inter = (sa & sb).size
+      inter.toDouble / (sa.size + sb.size - inter)
+    }
     val rows = d.select(col("doc_id"), col("text"),
         Dedup.simhash16(col("text")).as("sh")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -1378,9 +1378,7 @@ class LlmSpec extends AnyFunSuite {
     val want = scala.collection.mutable.Map[(Long, Long), Double]()
     for (i <- rows.indices; dd <- 1 until 4; if i + dd < rows.length) {
       val a = rows(i); val b = rows(i + dd)
-      val j = graft.functions.JaccardShinglesHelper.jaccard(
-        org.apache.spark.unsafe.types.UTF8String.fromString(a._2),
-        org.apache.spark.unsafe.types.UTF8String.fromString(b._2), 5)
+      val j = shingleJaccard(a._2, b._2)
       if (j >= 0.5) want((math.min(a._1, b._1), math.max(a._1, b._1))) = j
     }
     assert(got.keySet == want.keySet,
@@ -1659,7 +1657,7 @@ class LlmSpec extends AnyFunSuite {
     // C0/VT/DEL controls vanish; runs of whitespace collapse
     val messy = "é が  ạ́\tx\u0007y\u000Bz\u007F ﬁ "
     val out = graft.llm.TextAnalysis.normalizeText(
-      spark, Seq((1L, messy), (2L, "plain ascii"), (3L, null: String))
+      Seq((1L, messy), (2L, "plain ascii"), (3L, null: String))
         .toDF("doc_id", "text"), "doc_id", "text")
       .orderBy("doc_id").collect()
     val norm = out(0).getAs[String]("norm_text")
@@ -1678,7 +1676,7 @@ class LlmSpec extends AnyFunSuite {
     assert(graft.functions.NfcNormalizeHelper.normalize(nonAscii).toString == "é")
     // scan rider: narrow map, no exchange anywhere in the plan
     val plan = graft.llm.TextAnalysis.normalizeText(
-      spark, docs, "doc_id", "text").queryExecution.executedPlan.toString
+      docs, "doc_id", "text").queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), "normalizeText must be zero-shuffle")
     assert(plan.contains("*("), "normalizeText must stay in whole-stage codegen")
   }
@@ -2748,8 +2746,8 @@ class LlmSpec extends AnyFunSuite {
     // pair within hamming 3 MUST be found (the 4-block pigeonhole
     // guarantee is exact, not probabilistic), none beyond it, and
     // reported distances match
-    val sh = d.select(col("doc_id"), graft.functions.SimHash60.column(
-        spark, TextAnalysis.tokens(col("text"))).as("sh"))
+    val sh = d.select(col("doc_id"), graft.functions.SimHash1660.column(
+        TextAnalysis.tokens(col("text"))).getField("sh60").as("sh"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val want = (for {
       (ia, sa) <- sh; (ib, sb) <- sh if ia < ib
@@ -3629,7 +3627,7 @@ class LlmSpec extends AnyFunSuite {
     val d = Seq((1L, Seq(1.0f, -2.0f, 4.0f, 0.5f)),
       (2L, Seq(0.0f, 0.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
     val cs = d.orderBy("vec_id").select(
-      graft.functions.Int8Codes.column(spark, col("embedding"), 4))
+      graft.functions.Int8Codes.column(col("embedding"), 4))
       .collect().map(_.getSeq[Double](0))
     assert(cs(0) == Seq(32.0, -63.0, 127.0, 16.0))
     assert(cs(1) == Seq(0.0, 0.0, 0.0, 0.0), "zero vector -> zero codes")

@@ -957,7 +957,7 @@ class StreamingSpec extends AnyFunSuite {
     // additivity: per-epoch n_new sums to the corpus's distinct count
     val total = StreamingPipeline.readCorpus(spark, corpus)
       .select(explode(graft.functions.WordShingles.column(
-        spark, col("clean_text"), 5, distinct = true)).as("s"))
+        col("clean_text"), 5, distinct = true)).as("s"))
       .distinct().count()
     assert(nov.values.map(_._2).sum == total)
   }
