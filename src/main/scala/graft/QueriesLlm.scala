@@ -7162,11 +7162,12 @@ object QueriesLlm {
                AS survival
       FROM fin ORDER BY t_days"""))
 
-  /** EXACT set-similarity self-join (prefix filtering + length
-    * bounds) at Jaccard ≥ 0.5 over 5-char shingle sets — the oracle
-    * is the BRUTE-FORCE cross product, so the hash match proves the
-    * prefix filter loses no true pair; see
-    * [[Dedup.setSimJoinPairs]]. */
+  /** EXACT set-similarity self-join at Jaccard ≥ 0.5 over 5-char
+    * shingle sets — the oracle is the BRUTE-FORCE cross product, so
+    * the hash match proves the join loses no true pair. The documents
+    * corpus is low-diversity, so the cost gate evaluates its pairs
+    * directly in a nested-loop join instead of running the prefix
+    * join; see [[Dedup.setSimJoinPairs]]. */
   private val q278 = Q("q278_set_sim_join",
     (s, dir) => Dedup.setSimJoinPairs(t(s, dir, "documents"),
       "doc_id", "text", threshold = 0.5).orderBy("id_a", "id_b"),

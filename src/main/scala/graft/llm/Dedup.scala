@@ -30,14 +30,9 @@ object Dedup {
     * Native since r19 (guide §4): the digest-byte read replaces the
     * md5-hex → substring → conv radix parse, bit-identical
     * ([[graft.functions.Md5Hashing.h60]]; LlmSpec pins it against
-    * [[shingleHashSql]]). */
+    * the built-in chain `conv(substring(md5(x), 1, 15), 16, 10)`). */
   def shingleHash(x: Column): Column =
     graft.functions.Md5Prefix60.column(x)
-
-  /** The pre-r19 built-in-chain form of [[shingleHash]] — kept as the
-    * spec's independent reference implementation. */
-  private[graft] def shingleHashSql(x: Column): Column =
-    conv(substring(md5(x), 1, 15), 16, 10).cast("long")
 
   /** Distinct HASHED shingle set: the set-similarity workhorse at
     * scale. Long arrays are ~10× cheaper than string arrays to
@@ -47,16 +42,10 @@ object Dedup {
     * formulation in the MinHash literature. Native single-pass since
     * r19: one digest per shingle over one byte buffer, first-
     * occurrence-ordered distinct — value-identical INCLUDING element
-    * order to [[hashedShinglesHof]] (LlmSpec pins it). */
+    * order to the pre-r19 higher-order-function form (LlmSpec pins
+    * it). */
   def hashedShingles(text: Column, k: Int = 5): Column =
     graft.functions.HashedShingles.column(text, k)
-
-  /** The pre-r19 HOF form of [[hashedShingles]] — kept as the spec's
-    * independent reference implementation. */
-  private[graft] def hashedShinglesHof(text: Column, k: Int = 5): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(text) - (k - 1), lit(1))),
-      i => shingleHashSql(text.substr(i, lit(k)))))
 
   /** MinHash hash family: ONE md5 per shingle yields two 32-bit ints
     * (a, b); hash_i = (a + i·b) mod p — the classic affine family. This
@@ -1694,27 +1683,78 @@ object Dedup {
     * candidate join keys on PREFIX shingles only, and the rare-first
     * order makes those keys the most selective ones. Length filter
     * ⌈t·n_a⌉ ≤ n_b ≤ ⌊n_a/t⌋ prunes size-incompatible pairs before
-    * verification.
+    * verification. Documents with a null text never pair.
     *
-    * Scale shape: one shingle explode (data-sized, keyed), one
-    * shingle-frequency count (shingle-cardinality), one per-doc
-    * rarity-rank window (doc-keyed), a prefix-shingle equi-join whose
-    * keys are by construction the RAREST shingles (the skew-killer —
-    * stop-shingles never enter prefixes of similar pairs at
-    * realistic thresholds), distinct candidate pairs, then one
-    * verification pass (two id-keyed set fetches + array_intersect).
-    * Nothing corpus². The oracle is the BRUTE-FORCE cross product, so
-    * the hash match PROVES completeness on the gate corpus.
+    * ==Cost gate==
+    * The prefix join cannot beat brute force on a low-diversity
+    * corpus: when few distinct shingles fill many prefixes, its
+    * equi-join matches more pairs than the corpus has. So before it
+    * runs, the gate computes, from the set-size histogram and the exact
+    * distinct-shingle count T (the row count of the shingle-frequency
+    * table the prefix path ranks by, persisted so both share it):
+    *  - N, the documents, and N(N−1)/2, the pairs the blocked path
+    *    evaluates;
+    *  - P, the total prefix length Σ_docs (n − ⌈t·n⌉ + 1);
+    *  - LB = P·(P/T − 1)/2;
+    *  - C, the exact number of length-compatible pairs (reported, not
+    *    compared).
+    * Theorem: LB is a lower bound on the unordered pair matches of the
+    * prefix equi-join on `tk` (a pair sharing several prefix tokens
+    * counts once per token). A prefix token held by c documents matches
+    * C(c, 2) pairs; the c sum to P over at most T tokens; Σ C(c, 2) is
+    * convex in the c, so it is at least x·C(P/x, 2) for the x distinct
+    * prefix tokens, and x·C(P/x, 2) falls as x grows, so it is at least
+    * T·C(P/T, 2) = LB. (T must be exact or an upper bound: an undercount
+    * would break the proof.) When LB > N(N−1)/2, the prefix join alone
+    * would match more pairs than the blocked path evaluates, so the
+    * prefix, positional and hot-grid machinery is skipped and every pair
+    * is evaluated directly: `base` joined to itself on `id_a < id_b`,
+    * the length bounds, an overlap bound the exact test implies and the
+    * exact Jaccard test, all inside the join condition, so no pair row
+    * ever carries two sets and the kernel runs only on the C
+    * length-compatible pairs. The result is bit-identical to the prefix
+    * path's. Spark picks a broadcast nested-loop join or a cartesian
+    * product by size; on that path the work IS corpus², which the gate
+    * has shown the prefix join's matches to exceed. The comparison
+    * counts pair evaluations, not kernel calls. Otherwise
+    * (LB ≤ N(N−1)/2) the prefix path below runs, and its scale shape
+    * holds.
+    *
+    * Prefix-path scale shape: one shingle explode (data-sized,
+    * keyed), one shingle-frequency count (shingle-cardinality), one
+    * per-doc rarity-rank window (doc-keyed), a prefix-shingle
+    * equi-join whose keys are by construction the RAREST shingles (the
+    * skew-killer — stop-shingles never enter prefixes of similar pairs
+    * at realistic thresholds), distinct candidate pairs, then one
+    * verification pass (two id-keyed set fetches + the merge kernel).
+    * Nothing corpus² on this path. The oracle is the BRUTE-FORCE cross
+    * product, so the hash match PROVES completeness on the gate
+    * corpus.
+    *
+    * ==Observations==
+    * `<tag>_gate` carries the decision on both paths: `path`
+    * ("blocked" or "prefix"), `lb`, `pairs` (N(N−1)/2) and `c`.
+    * `<tag>_cands` (`cand_rows_post`) counts the candidate pairs that reach the
+    * kernel: on the prefix path the positional filter's survivors
+    * (before the distinct), on the blocked path C, because the kernel
+    * runs inside the join condition exactly on the length-compatible
+    * pairs and no pair row exists to count. The prefix path also
+    * reports `<tag>_cold_prefix`, `<tag>_cold`, `<tag>_hot_prefix`
+    * and `<tag>_hot`.
     *
     * ==Cache-release contract (the [[lshPairs]] loan rule)==
     * `materialize = true` (default) computes the pair artifact
-    * eagerly and releases BOTH internal caches (the sorted-set base
-    * and the rarity-ranked prefix frame) before return.
+    * eagerly and releases every internal cache (the sorted-set base
+    * and, on the prefix path, the shingle-frequency table and the
+    * rarity-ranked prefix frame) before return; the blocked path
+    * releases the frequency table as soon as the gate has counted it.
     * `materialize = false` hands back the LAZY plan WITH the caches
-    * still held — the caller owns the release (consume promptly in a
-    * one-shot session, or accept recompute-after-eviction); a
-    * long-lived session that opts out of materialization leaks the
-    * cached base and prefix frames until LRU eviction. */
+    * still held — the caller owns the release (consume
+    * promptly in a one-shot session, or accept
+    * recompute-after-eviction); a long-lived session that opts out of
+    * materialization leaks the cached frames until LRU eviction. The
+    * gate runs two jobs in either mode: the frequency table's count
+    * (which materializes it and `base`) and the size histogram. */
   def setSimJoinPairs(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5, materialize: Boolean = true,
       checkpointDir: Option[String] = None,
@@ -1724,18 +1764,10 @@ object Dedup {
     require(hotTokenDf >= 2, s"hotTokenDf must be >= 2, got $hotTokenDf")
     require(saltBuckets >= 2 && saltBuckets <= 1024,
       s"saltBuckets must be in [2,1024], got $saltBuckets")
-    val sp = docs.sparkSession
-    val par = sp.sparkContext.defaultParallelism
-    // sorted sets: the verification kernel is a primitive merge pass
-    // (SortedIntersectCount) instead of array_intersect's boxed hash
-    // set — on millions of candidates the boxing dominated the join
-    val base = docs.repartition(par).select(col(idCol).as("id"),
-      array_sort(hashedShingles(col(textCol))).as("shs")).persist()
-    val tok = base.select(col("id"), size(col("shs")).as("n"),
-      explode(col("shs")).as("tk"))
-    val freq = tok.groupBy(col("tk")).agg(count(lit(1)).as("__f"))
-    val wRare = Window.partitionBy(col("id"))
-      .orderBy(col("__f").asc, col("tk").asc)
+    val base = setSimSets(docs, idCol, textCol).persist()
+    val freq = shingleFreq(base).persist()
+    val gate = setSimGateOf(base, freq.count(), threshold)
+    val obsTag = s"set_sim_join_${obsSeq.incrementAndGet()}"
     // EXACTNESS NOTE (all three pruning bounds): the textbook forms
     // take ceil() of a float product (prefix length n − ⌈t·n⌉ + 1,
     // length filter ⌈t·na⌉ ≤ nb ≤ ⌊na/t⌋, positional bound
@@ -1750,7 +1782,112 @@ object Dedup {
     // double is ≤ k), so `t·n <= k` is exact where `k >= ceil(t·n)`
     // is not. The positional bound multiplies on BOTH sides (two
     // roundings), so it alone gets a 1e-9 relaxation — slack only
-    // ADMITS candidates, and verification is exact.
+    // ADMITS candidates, and verification is exact. The gate's
+    // histogram arithmetic (setSimGateOf) uses the same products.
+    val lengthOk =
+      col("__nb").cast("double") >= lit(threshold) * col("__na").cast("double") &&
+      lit(threshold) * col("__nb").cast("double") <= col("__na").cast("double")
+    // sorted sets: the verification kernel is a primitive merge pass
+    // (SortedIntersectCount) instead of array_intersect's boxed hash
+    // set — on millions of candidates the boxing dominated the join
+    val inter = graft.functions.SortedIntersectCount.column(col("__sa"), col("__sb"))
+    val jac = inter.cast("double") /
+      (size(col("__sa")) + size(col("__sb")) - inter).cast("double")
+    val (pairs, caches) =
+      if (gate.blocked) {
+        // The kernel runs ONCE per length-compatible pair, on a bound
+        // the exact test implies: fl(i/u) ≥ t needs i/u ≥ t·(1 − 2⁻⁵³),
+        // so i·(1+t) ≥ t·(na+nb)·(1 − 2⁻⁵³), and the 1e-9 slack covers
+        // every rounding of the doubles below (slack only ADMITS). The
+        // exact Jaccard test, whose two kernel calls codegen does not
+        // share, then runs on the bound's few survivors only.
+        val overlapOk = inter.cast("double") * lit(1.0 + threshold) >=
+          lit(threshold * (1.0 - 1e-9)) * (col("__na") + col("__nb")).cast("double")
+        val sets = base.select(col("id"), col("shs"), size(col("shs")))
+        val verified = sets.toDF("__ia", "__sa", "__na")
+          .join(sets.toDF("__ib", "__sb", "__nb"),
+            col("__ia") < col("__ib") && lengthOk && overlapOk && jac >= threshold)
+          .select(col("__ia").as("id_a"), col("__ib").as("id_b"),
+            jac.as("jaccard"))
+          .observe(s"${obsTag}_cands", lit(gate.c).as("cand_rows_post"))
+        freq.unpersist(blocking = false)
+        (verified, Seq(base))
+      } else {
+        val (verified, prefAll) = prefixJoinPairs(base, freq, threshold,
+          hotTokenDf, saltBuckets, obsTag, lengthOk, jac)
+        (verified, Seq(base, freq, prefAll))
+      }
+    val observed = pairs.observe(s"${obsTag}_gate",
+      lit(if (gate.blocked) "blocked" else "prefix").as("path"),
+      lit(gate.lb).as("lb"), lit(gate.pairs).as("pairs"), lit(gate.c).as("c"))
+    if (materialize) materializeAndRelease(observed, checkpointDir, caches)
+    else observed
+  }
+
+  /** The distinct sorted hashed-shingle set of every document with a
+    * text: `(id, shs)`, the input of [[setSimJoinPairs]] and its gate. */
+  private def setSimSets(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    docs.filter(col(textCol).isNotNull)
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+      .select(col(idCol).as("id"),
+        array_sort(hashedShingles(col(textCol))).as("shs"))
+
+  /** Document frequency `__f` of every distinct shingle `tk` of
+    * [[setSimSets]]' output: the prefix path's rarity order, and by
+    * its row count the gate's T. */
+  private def shingleFreq(base: DataFrame): DataFrame =
+    base.select(explode(col("shs")).as("tk"))
+      .groupBy(col("tk")).agg(count(lit(1)).as("__f"))
+
+  /** The [[setSimJoinPairs]] cost gate's inputs and decision: `lb`
+    * bounds the prefix equi-join's pair matches from below, `pairs` is
+    * N(N−1)/2, the pairs the blocked path evaluates, and `c` counts the
+    * length-compatible pairs, on which the blocked path runs the
+    * kernel. */
+  private[graft] final case class SetSimGate(lb: Double, pairs: Long, c: Long) {
+    def blocked: Boolean = lb > pairs.toDouble
+  }
+
+  /** The gate [[setSimJoinPairs]] computes on `docs` (two jobs). */
+  private[graft] def setSimGate(docs: DataFrame, idCol: String,
+      textCol: String, threshold: Double): SetSimGate = {
+    val base = setSimSets(docs, idCol, textCol)
+    setSimGateOf(base, shingleFreq(base).count(), threshold)
+  }
+
+  /** The gate from `base`'s size histogram and its distinct-shingle
+    * count `tokens`. */
+  private def setSimGateOf(base: DataFrame, tokens: Long,
+      threshold: Double): SetSimGate = {
+    val hist = base.groupBy(size(col("shs"))).count().collect()
+      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+    val sizes = hist.map(_._1.toDouble)
+    val docs = hist.map(_._2)
+    val below = docs.scanLeft(0L)(_ + _) // below(i): docs smaller than sizes(i)
+    var c = 0L
+    var p = 0L
+    var hi = 0 // sizes(i until hi) are compatible with sizes(i): t·m ≤ n
+    for (i <- sizes.indices) {
+      val n = sizes(i)
+      while (hi < sizes.length && threshold * sizes(hi) <= n) hi += 1
+      c += docs(i) * (docs(i) - 1) / 2 + docs(i) * (below(hi) - below(i + 1))
+      p += docs(i) * (n.toLong - math.ceil(threshold * n).toLong + 1)
+    }
+    val lb = if (tokens > 0) p * (p.toDouble / tokens - 1) / 2 else 0.0
+    SetSimGate(lb, below.last * (below.last - 1) / 2, c)
+  }
+
+  /** The prefix path of [[setSimJoinPairs]] over `base` and its
+    * [[shingleFreq]] table: the verified pairs and the persisted prefix
+    * frame the caller's loan must release. */
+  private def prefixJoinPairs(base: DataFrame, freq: DataFrame,
+      threshold: Double, hotTokenDf: Int, saltBuckets: Int, obsTag: String,
+      lengthOk: Column, jac: Column): (DataFrame, DataFrame) = {
+    val tok = base.select(col("id"), size(col("shs")).as("n"),
+      explode(col("shs")).as("tk"))
+    val wRare = Window.partitionBy(col("id"))
+      .orderBy(col("__f").asc, col("tk").asc)
     // OBSERVABILITY (r16 verdict): the grid guard's arming decision
     // (df > hotTokenDf) and the positional filter's selectivity are
     // invisible at run time without metrics — a 100 TB operator needs
@@ -1768,7 +1905,6 @@ object Dedup {
     // CollectMetrics node makes the sides non-identical, so exchange
     // reuse cannot collapse them), and an observation there would
     // double-count every row — the r17 ADVICE finding.
-    val obsTag = s"set_sim_join_${obsSeq.incrementAndGet()}"
     // prefAll is PERSISTED (r18): it feeds FOUR consumers — both sides
     // of the cold candidate self-join and both sides of the hot salted
     // grid — and the CollectMetrics observations make those subtrees
@@ -1824,9 +1960,7 @@ object Dedup {
     // (symmetric under a↔b swap, so the hot grid applies it verbatim
     // before canonicalizing)
     def pairFilters(requireOrder: Boolean): Column = {
-      val base =
-        col("__nb").cast("double") >= lit(threshold) * col("__na").cast("double") &&
-        lit(threshold) * col("__nb").cast("double") <= col("__na").cast("double") &&
+      val base = lengthOk &&
         (lit(1) + least(col("__na") - col("__ra"),
           col("__nb") - col("__rb"))).cast("double") * lit(1.0 + threshold) >=
           lit(threshold) * (col("__na") + col("__nb")).cast("double") - lit(1e-9)
@@ -1871,15 +2005,11 @@ object Dedup {
         Seq("__ia"))
       .join(base.select(col("id").as("__ib"), col("shs").as("__sb")),
         Seq("__ib"))
-    val inter = graft.functions.SortedIntersectCount.column(col("__sa"), col("__sb"))
-    val jac = inter.cast("double") /
-      (size(col("__sa")) + size(col("__sb")) - inter).cast("double")
     val pairs = withSets.withColumn("jaccard", jac)
       .filter(col("jaccard") >= threshold)
       .select(col("__ia").as("id_a"), col("__ib").as("id_b"),
         col("jaccard"))
-    if (materialize) materializeAndRelease(pairs, checkpointDir, Seq(base, prefAll))
-    else pairs
+    (pairs, prefAll)
   }
 
   /** Sort-key table for INCREMENTAL sorted-neighborhood dedup:

@@ -659,7 +659,7 @@ final class MetricPlanner(val registry: SemanticRegistry) {
             dm.inputs.foldLeft(withAliases) { (e, in) =>
               e.replaceAll("(?<![.\\w])" + java.util.regex.Pattern.quote(in) + "\\b", s"a.$in")
             } + s" AS $name" + metricDesc(name)
-          case None => s"a.$name" + metricDesc(name)
+          case None => s"a.$name AS $name" + metricDesc(name)
         }
       val outItems = keyNames.map(k => s"a.$k AS $k") ++ req.metrics.map(offsetMetricSql)
       val joins = shifts.zipWithIndex.map { case (((n, grain), _), i) =>

@@ -79,72 +79,6 @@ object Prof {
       time(s"$name.warm") { graft.Queries.queries(name)(spark, sfDir).count() }
     }
 
-    if (what == "q278") {
-      // stage decomposition of Dedup.setSimJoinPairs (threshold 0.5,
-      // defaults) — mirrors the internal construction step by step
-      import graft.llm.Dedup
-      import org.apache.spark.sql.expressions.Window
-      val par = spark.sparkContext.defaultParallelism
-      val threshold = 0.5
-      val docs = t("documents")
-      val base = docs.repartition(par).select(col("doc_id").as("id"),
-        array_sort(Dedup.hashedShingles(col("text"))).as("shs")).persist()
-      time("q278.base-materialize") {
-        base.agg(sum(size(col("shs")))).collect() }
-      val tok = base.select(col("id"), size(col("shs")).as("n"),
-        explode(col("shs")).as("tk"))
-      time("q278.tok-explode") {
-        tok.queryExecution.toRdd.count() }
-      val freq = tok.groupBy(col("tk")).agg(count(lit(1)).as("__f")).persist()
-      time("q278.freq") { println("  n_tokens=" + freq.count()) }
-      val wRare = Window.partitionBy(col("id"))
-        .orderBy(col("__f").asc, col("tk").asc)
-      val prefAll = tok.join(freq, Seq("tk"))
-        .withColumn("__r", row_number().over(wRare))
-        .filter(lit(threshold) * col("n").cast("double") <=
-          (col("n") - col("__r") + 1).cast("double"))
-        .select(col("tk"), col("id"), col("n"), col("__r"), col("__f"))
-        .persist()
-      time("q278.prefAll(join+window)") { println("  n_pref=" + prefAll.count()) }
-      val prefix = prefAll.filter(col("__f") <= 16384)
-        .select(col("tk"), col("id"), col("n"), col("__r"))
-      def pairFilters(requireOrder: Boolean) = {
-        val b =
-          col("__nb").cast("double") >= lit(threshold) * col("__na").cast("double") &&
-          lit(threshold) * col("__nb").cast("double") <= col("__na").cast("double") &&
-          (lit(1) + least(col("__na") - col("__ra"),
-            col("__nb") - col("__rb"))).cast("double") * lit(1.0 + threshold) >=
-            lit(threshold) * (col("__na") + col("__nb")).cast("double") - lit(1e-9)
-        if (requireOrder) col("__ia") < col("__ib") && b
-        else col("__ia") =!= col("__ib") && b
-      }
-      val coldCands = prefix.select(col("tk"), col("id").as("__ia"),
-          col("n").as("__na"), col("__r").as("__ra"))
-        .join(prefix.select(col("tk"), col("id").as("__ib"),
-          col("n").as("__nb"), col("__r").as("__rb")), Seq("tk"))
-      time("q278.cold-join-raw") {
-        println("  n_raw=" + coldCands.queryExecution.toRdd.count()) }
-      val filtered = coldCands.filter(pairFilters(requireOrder = true))
-        .select(col("__ia"), col("__ib"))
-      time("q278.cold-join-filtered") {
-        println("  n_filt=" + filtered.queryExecution.toRdd.count()) }
-      val cands = filtered.distinct().persist()
-      time("q278.distinct") { println("  n_cand=" + cands.count()) }
-      val withSets = cands
-        .join(base.select(col("id").as("__ia"), col("shs").as("__sa")), Seq("__ia"))
-        .join(base.select(col("id").as("__ib"), col("shs").as("__sb")), Seq("__ib"))
-      val inter = graft.functions.SortedIntersectCount.column(col("__sa"), col("__sb"))
-      val jac = inter.cast("double") /
-        (size(col("__sa")) + size(col("__sb")) - inter).cast("double")
-      time("q278.verify") {
-        withSets.withColumn("jaccard", jac)
-          .filter(col("jaccard") >= threshold)
-          .queryExecution.toRdd.count() }
-      time("q278.whole-query") {
-        graft.Queries.queries("q278_set_sim_join")(spark, sfDir)
-          .queryExecution.toRdd.count() }
-    }
-
     if (what == "plan") {
       // print the executed plan skeleton of a named query (arg 3)
       val name = if (args.length > 2) args(2) else "q74_tpch_q5_shape"

@@ -12,6 +12,17 @@ class LlmSpec extends AnyFunSuite {
   private def docs = Tables.load(spark, dir, "documents")
   private def emb = Tables.load(spark, dir, "embeddings")
 
+  /** The pre-r19 built-in-chain form of `Dedup.shingleHash`: the
+    * independent reference the native kernel is pinned against. */
+  private def shingleHashSql(x: org.apache.spark.sql.Column) =
+    conv(substring(md5(x), 1, 15), 16, 10).cast("long")
+
+  /** The pre-r19 higher-order-function form of `Dedup.hashedShingles`. */
+  private def hashedShinglesHof(text: org.apache.spark.sql.Column, k: Int = 5) =
+    array_distinct(transform(
+      sequence(lit(1), greatest(length(text) - (k - 1), lit(1))),
+      i => shingleHashSql(text.substr(i, lit(k)))))
+
   test("exact dedup groups identical texts under one keeper") {
     import spark.implicits._
     val d = Seq((1L, "hello world"), (2L, "hello  world"), (3L, "bye"))
@@ -121,12 +132,12 @@ class LlmSpec extends AnyFunSuite {
   test("native md5prefix60 + hashed_shingles are value-identical (incl. order) to the SQL-chain HOF forms") {
     import spark.implicits._
     val edge = Seq((100001L, ""), (100002L, "ab"), (100003L, "héllo wörld ✓ unicode"),
-      (100004L, "aaaaaaaaaa")).toDF("doc_id", "text")
+      (100004L, "aaaaaaaaaa"), (100005L, "ababababab xy ababababab")).toDF("doc_id", "text")
     for (df <- Seq(docs.select(col("doc_id"), col("text")), edge)) {
       val both = df.select(
-        Dedup.shingleHashSql(col("text")).as("sqlh"),
+        shingleHashSql(col("text")).as("sqlh"),
         Dedup.shingleHash(col("text")).as("nath"),
-        concat_ws(",", Dedup.hashedShinglesHof(col("text"))).as("hof"),
+        concat_ws(",", hashedShinglesHof(col("text"))).as("hof"),
         concat_ws(",", Dedup.hashedShingles(col("text"))).as("nat"))
         .collect()
       assert(both.nonEmpty)
@@ -139,11 +150,11 @@ class LlmSpec extends AnyFunSuite {
     // one-element [null] array on BOTH paths (the HOF's
     // greatest(null,1)=1 window over a null slice)
     val n = docs.limit(1).select(
-      Dedup.shingleHashSql(lit(null).cast("string")).as("a"),
+      shingleHashSql(lit(null).cast("string")).as("a"),
       Dedup.shingleHash(lit(null).cast("string")).as("b"),
-      size(Dedup.hashedShinglesHof(lit(null).cast("string"))).as("c"),
+      size(hashedShinglesHof(lit(null).cast("string"))).as("c"),
       size(Dedup.hashedShingles(lit(null).cast("string"))).as("d"),
-      Dedup.hashedShinglesHof(lit(null).cast("string")).getItem(0).as("e"),
+      hashedShinglesHof(lit(null).cast("string")).getItem(0).as("e"),
       Dedup.hashedShingles(lit(null).cast("string")).getItem(0).as("f"))
       .collect()(0)
     assert(n.isNullAt(0) && n.isNullAt(1))
@@ -3239,25 +3250,39 @@ class LlmSpec extends AnyFunSuite {
     }
   }
 
-  test("setSimJoinPairs: equals brute force on the corpus, exact at the threshold boundary") {
-    import org.apache.spark.sql.functions.{size => asize, array_intersect}
-    // brute-force reference over the same shingle sets
-    val sets = docs.select(col("doc_id"),
+  /** Every id-ordered pair of `corpus` with Jaccard ≥ `t` over its
+    * hashed shingle sets: the brute-force completeness reference. */
+  private def bruteSetSim(corpus: org.apache.spark.sql.DataFrame,
+      t: Double): Map[(Long, Long), Double] = {
+    import org.apache.spark.sql.functions.{size => asize}
+    val sets = corpus.select(col("doc_id"),
       Dedup.hashedShingles(col("text")).as("shs"))
-    val a = sets.select(col("doc_id").as("ia"), col("shs").as("sa"))
-    val b = sets.select(col("doc_id").as("ib"), col("shs").as("sb"))
     val inter = asize(array_intersect(col("sa"), col("sb")))
-    val brute = a.join(b, col("ia") < col("ib"))
+    pairMap(sets.select(col("doc_id").as("ia"), col("shs").as("sa"))
+      .join(sets.select(col("doc_id").as("ib"), col("shs").as("sb")),
+        col("ia") < col("ib"))
       .select(col("ia"), col("ib"),
         (inter.cast("double") /
           (asize(col("sa")) + asize(col("sb")) - inter).cast("double"))
           .as("j"))
-      .filter(col("j") >= 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-      .toMap
-    val got = Dedup.setSimJoinPairs(docs, "doc_id", "text", 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-      .toMap
+      .filter(col("j") >= t))
+  }
+
+  private def pairMap(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Double] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+
+  test("setSimJoinPairs: equals brute force on the corpus, exact at the threshold boundary") {
+    val corpus = SetSimCorpora.diverse(spark)
+    assert(!Dedup.setSimGate(corpus, "doc_id", "text", 0.5).blocked,
+      "a diverse corpus must take the prefix path")
+    val brute = bruteSetSim(corpus, 0.5)
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val got = pairMap(Dedup.setSimJoinPairs(corpus, "doc_id", "text", 0.5))
+    val kept = spark.sparkContext.getPersistentRDDs.keySet -- before
+    // the loan releases the sorted sets, the frequency table and the
+    // prefix frame: the result's local checkpoint is all that is left
+    assert(kept.size == 1, s"loan left $kept")
+    kept.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist(false))
     assert(got == brute,
       s"prefix filter must lose no pair: got ${got.size}, brute ${brute.size}")
     assert(brute.nonEmpty, "fixture must contain similar pairs")
@@ -3268,14 +3293,97 @@ class LlmSpec extends AnyFunSuite {
       (3L, "cccccddddd"), (4L, "ccccceeeee"),       // J = 1/11 < t
       (5L, "zzzzz"), (6L, "zzzzz"))
       .toDF("doc_id", "text")
+    assert(!Dedup.setSimGate(planted, "doc_id", "text", 0.9).blocked)
     val pp = Dedup.setSimJoinPairs(planted, "doc_id", "text", 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pp == Set((1L, 2L), (5L, 6L)), pp.toString)
   }
 
+  test("setSimJoinPairs: the cost gate verifies length-compatible pairs directly on a low-diversity corpus") {
+    val corpus = SetSimCorpora.lowDiversity(spark)
+    val gate = Dedup.setSimGate(corpus, "doc_id", "text", 0.5)
+    assert(gate.blocked && gate.lb > gate.pairs && gate.pairs == 200L * 199 / 2,
+      gate.toString)
+    // C recounted pair by pair with the join's own length comparisons
+    val sizes = corpus.select(col("doc_id"),
+        org.apache.spark.sql.functions.size(Dedup.hashedShingles(col("text"))))
+      .collect()
+      .map(r => r.getLong(0) -> r.getInt(1).toDouble)
+    val compatible = (for ((ia, na) <- sizes; (ib, nb) <- sizes
+      if ia < ib && nb >= 0.5 * na && 0.5 * nb <= na) yield 1L).sum
+    assert(gate.c == compatible, s"gate C ${gate.c} vs recount $compatible")
+    val brute = bruteSetSim(corpus, 0.5)
+    assert(brute.get((198L, 199L)).contains(0.5) && brute.contains((3L, 197L)),
+      s"fixture must hold an exact copy and a pair exactly at t: $brute")
+    val got = pairMap(Dedup.setSimJoinPairs(corpus, "doc_id", "text", 0.5))
+    assert(got == brute, s"blocked verify must equal brute force: got $got, brute $brute")
+    // the documents fixture has the same shape and takes the same path
+    assert(Dedup.setSimGate(docs, "doc_id", "text", 0.5).blocked)
+    val fixtureBrute = bruteSetSim(docs, 0.5)
+    assert(fixtureBrute.nonEmpty)
+    assert(pairMap(Dedup.setSimJoinPairs(docs, "doc_id", "text", 0.5)) == fixtureBrute)
+  }
+
+  test("setSimJoinPairs blocked path: the loan keeps only the result; a reliable checkpoint works") {
+    val corpus = SetSimCorpora.lowDiversity(spark)
+    assert(Dedup.setSimGate(corpus, "doc_id", "text", 0.5).blocked)
+    val brute = bruteSetSim(corpus, 0.5)
+    def added(before: Set[Int]) = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val local = Dedup.setSimJoinPairs(corpus, "doc_id", "text", 0.5)
+    // the local checkpoint of the result is the one persisted RDD left
+    assert(added(before).size == 1, s"loan left ${added(before)}")
+    assert(pairMap(local) == brute)
+    added(before).foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist(false))
+    val dir = java.nio.file.Files.createTempDirectory("setsim-ckpt").toString
+    val before2 = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val reliable = Dedup.setSimJoinPairs(corpus, "doc_id", "text", 0.5,
+      checkpointDir = Some(dir))
+    assert(added(before2).isEmpty, s"reliable checkpoint left ${added(before2)}")
+    assert(pairMap(reliable) == brute)
+  }
+
+  test("setSimJoinPairs blocked path: observations report the gate and the pairs the kernel verifies") {
+    val corpus = SetSimCorpora.lowDiversity(spark)
+    val gate = Dedup.setSimGate(corpus, "doc_id", "text", 0.5)
+    assert(gate.blocked)
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, Map[String, Any]]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        qe.observedMetrics.foreach { case (name, row) =>
+          seen.put(name, row.getValuesMap[Any](row.schema.fieldNames))
+        }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Dedup.setSimJoinPairs(corpus, "doc_id", "text", 0.5)
+      def byTag(suffix: String): Seq[Map[String, Any]] = {
+        import scala.jdk.CollectionConverters._
+        seen.asScala.collect { case (k, v) if k.endsWith(suffix) => v }.toSeq
+      }
+      // listener delivery is async
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (System.nanoTime() < deadline &&
+             (byTag("_gate").isEmpty || byTag("_cands").isEmpty))
+        Thread.sleep(50)
+      val g = byTag("_gate")
+      assert(g.exists(m => m("path") == "blocked" &&
+        m("c").asInstanceOf[Number].longValue == gate.c &&
+        m("pairs").asInstanceOf[Number].longValue == gate.pairs &&
+        m("lb").asInstanceOf[Number].doubleValue == gate.lb), s"gate observation: $g")
+      val cands = byTag("_cands")
+      assert(cands.exists(m => m("cand_rows_post").asInstanceOf[Number].longValue == gate.c),
+        s"the blocked verify runs the kernel on C pairs: $cands vs ${gate.c}")
+      assert(byTag("_cold").isEmpty && byTag("_hot_prefix").isEmpty,
+        s"no prefix join runs on the blocked path: ${seen.keySet()}")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("setSimJoinPairs: no float-ceil false negative at an exactly-at-threshold pair (t = 0.2)") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{size => asize, array_intersect}
     // The regression corpus for the ceil cliff: at t = 0.2 the
     // positional bound t/(1+t)·(na+nb) = 0.2/1.2·12 evaluates to
     // 2.0000000000000004 in double, so the old ceil() form demanded
@@ -3294,19 +3402,9 @@ class LlmSpec extends AnyFunSuite {
       (4L, "abcdefuvwxy"),
       (5L, "abcdefzyxwv"))
       .toDF("doc_id", "text")
-    val sets = corpus.select(col("doc_id"),
-      Dedup.hashedShingles(col("text")).as("shs"))
-    val inter = asize(array_intersect(col("sa"), col("sb")))
-    val brute = sets.select(col("doc_id").as("ia"), col("shs").as("sa"))
-      .join(sets.select(col("doc_id").as("ib"), col("shs").as("sb")),
-        col("ia") < col("ib"))
-      .select(col("ia"), col("ib"),
-        (inter.cast("double") /
-          (asize(col("sa")) + asize(col("sb")) - inter).cast("double"))
-          .as("j"))
-      .filter(col("j") >= 0.2)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-      .toMap
+    val brute = bruteSetSim(corpus, 0.2)
+    assert(!Dedup.setSimGate(corpus, "doc_id", "text", 0.2).blocked,
+      "the ceiling regression lives on the prefix path")
     val got = Dedup.setSimJoinPairs(corpus, "doc_id", "text", 0.2)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
       .toMap
@@ -3318,7 +3416,6 @@ class LlmSpec extends AnyFunSuite {
 
   test("setSimJoinPairs: hot-token salted grid preserves completeness on a hyper-frequent shingle") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{size => asize, array_intersect}
     // every doc contains the same 9-char core (5 shared shingles —
     // hyper-frequent, df = corpus size, guaranteed to enter short
     // prefixes), plus a per-doc tail; consecutive docs share tails so
@@ -3332,20 +3429,10 @@ class LlmSpec extends AnyFunSuite {
       val tail = s"${('a' + g % 7).toChar}${('a' + (g / 7) % 7).toChar}xyz${i % 2}"
       (i.toLong, core + tail) // (2k, 2k+1) differ in the LAST char only: J = 10/12
     }.toDF("doc_id", "text")
-    val sets = corpus.select(col("doc_id"),
-      Dedup.hashedShingles(col("text")).as("shs"))
-    val inter = asize(array_intersect(col("sa"), col("sb")))
-    val brute = sets.select(col("doc_id").as("ia"), col("shs").as("sa"))
-      .join(sets.select(col("doc_id").as("ib"), col("shs").as("sb")),
-        col("ia") < col("ib"))
-      .select(col("ia"), col("ib"),
-        (inter.cast("double") /
-          (asize(col("sa")) + asize(col("sb")) - inter).cast("double"))
-          .as("j"))
-      .filter(col("j") >= 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-      .toMap
+    val brute = bruteSetSim(corpus, 0.5)
     assert(brute.nonEmpty, "fixture must contain similar pairs")
+    assert(!Dedup.setSimGate(corpus, "doc_id", "text", 0.5).blocked,
+      "the salted grid lives on the prefix path")
     val gridded = Dedup.setSimJoinPairs(corpus, "doc_id", "text", 0.5,
       hotTokenDf = 2, saltBuckets = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
@@ -3370,6 +3457,8 @@ class LlmSpec extends AnyFunSuite {
       val tail = s"${('a' + g % 7).toChar}${('a' + (g / 7) % 7).toChar}xyz${i % 2}"
       (i.toLong, "commoncor" + tail)
     }.toDF("doc_id", "text")
+    assert(!Dedup.setSimGate(corpus, "doc_id", "text", 0.5).blocked,
+      "the grid and positional-filter metrics live on the prefix path")
     val seen = new java.util.concurrent.ConcurrentHashMap[String,
       Map[String, Any]]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {

@@ -1410,13 +1410,42 @@ class PlanQualitySpec extends AnyFunSuite {
       "train side must not shuffle-join: " + plan.take(3000))
   }
 
-  test("q278 set-sim join (lazy): candidate join keyed on prefix shingle, rarity window doc-keyed, no cartesian") {
-    val docs = graft.sources.Tables.load(spark, dir, "documents")
+  /** Runs `body` on the lazy set-sim plan of `corpus` and releases the
+    * caches the lazy contract leaves held. */
+  private def setSimPlan(corpus: org.apache.spark.sql.DataFrame)(
+      body: String => Unit): Unit = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     try {
-      val pairs = graft.llm.Dedup.setSimJoinPairs(docs, "doc_id", "text",
+      val pairs = graft.llm.Dedup.setSimJoinPairs(corpus, "doc_id", "text",
         threshold = 0.5, materialize = false)
-      val plan = pairs.queryExecution.executedPlan.toString
+      body(pairs.queryExecution.executedPlan.toString)
+    } finally {
+      spark.sparkContext.getPersistentRDDs
+        .filter { case (id, _) => !before.contains(id) }
+        .values.foreach(_.unpersist(false))
+    }
+  }
+
+  test("q278 set-sim join (lazy): the low-diversity documents corpus verifies length-compatible pairs in one nested-loop join, no window, no candidate shuffle") {
+    val docs = graft.sources.Tables.load(spark, dir, "documents")
+    assert(graft.llm.Dedup.setSimGate(docs, "doc_id", "text", 0.5).blocked)
+    setSimPlan(docs) { plan =>
+      assert(plan.contains("BroadcastNestedLoopJoin") ||
+        plan.contains("CartesianProduct"), plan.take(4000))
+      assert(!plan.contains("windowspecdefinition"),
+        "no rarity window on the blocked path: " + plan.take(4000))
+      assert(!plan.contains("hashpartitioning"),
+        "no candidate rows are shuffled: " + plan.take(4000))
+      assert(plan.contains("sorted_intersect_count"), plan.take(4000))
+    }
+  }
+
+  test("q278 set-sim join (lazy): candidate join keyed on prefix shingle, rarity window doc-keyed, no cartesian") {
+    // the prefix-path shape, pinned on a diverse corpus (the documents
+    // fixture takes the blocked path)
+    val corpus = SetSimCorpora.diverse(spark)
+    assert(!graft.llm.Dedup.setSimGate(corpus, "doc_id", "text", 0.5).blocked)
+    setSimPlan(corpus) { plan =>
       assert(!plan.contains("CartesianProduct"), plan.take(4000))
       assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(4000))
       val joinLine = plan.linesIterator.find(l =>
@@ -1427,10 +1456,6 @@ class PlanQualitySpec extends AnyFunSuite {
         .filter(_.contains("windowspecdefinition")).toSeq
       assert(windows.nonEmpty && windows.forall(_.contains("id")),
         "rarity rank must be doc-partitioned:\n" + windows.mkString("\n"))
-    } finally {
-      spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !before.contains(id) }
-        .values.foreach(_.unpersist(false))
     }
   }
 

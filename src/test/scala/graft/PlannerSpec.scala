@@ -286,6 +286,36 @@ class PlannerSpec extends AnyFunSuite {
       DefaultRegistry.registry.derivedByName("revenue_mom_growth").offsetInputs)
   }
 
+  test("offset SQL aliases every selected column, so ORDER BY a base metric is unambiguous") {
+    // the request DuckDB rejected while the offset SQL selected
+    // `a.revenue` unaliased from `agg a LEFT JOIN agg p0` and ordered
+    // by `revenue` ("Ambiguous reference to column name")
+    Tables.registerAll(spark, dir)
+    val c = planner.compile(spark, dir, MetricQueryRequest(
+      metrics = Seq("revenue", "revenue_mom_growth"),
+      groupBy = Seq("l_shipdate__month"),
+      startTime = Some("1995-06-01"), endTime = Some("1996-06-01"),
+      orderBy = Seq("-revenue"), limit = Some(20)))
+    assert(c.sql.contains("LEFT JOIN agg p0") && c.sql.contains("ORDER BY revenue DESC"),
+      c.sql)
+    val selectList = c.sql.split("\nSELECT ")(1).split("\nFROM agg a")(0)
+    // split on top-level commas only (derived expressions nest calls)
+    val parts = scala.collection.mutable.Buffer(new StringBuilder)
+    var depth = 0
+    for (ch <- selectList) ch match {
+      case ',' if depth == 0 => parts += new StringBuilder
+      case _ =>
+        if (ch == '(') depth += 1 else if (ch == ')') depth -= 1
+        parts.last += ch
+    }
+    val items = parts.map(_.toString.trim).toSeq
+    assert(items.size == 3, items.toString)
+    items.foreach(i => assert(i.matches("(?s).+ AS \\w+"), s"unaliased select item: $i"))
+    val viaSql = spark.sql(c.sql).collect().map(_.toString)
+    val viaDf = c.df.collect().map(_.toString)
+    assert(viaSql.nonEmpty && viaSql.sameElements(viaDf), s"sql/df mismatch:\n${c.sql}")
+  }
+
   test("conversion metric: semi-join attribution matches a hand-computed funnel") {
     val c = planner.compile(spark, dir, MetricQueryRequest(
       metrics = Seq("view_to_purchase_count", "view_to_purchase_rate"),
