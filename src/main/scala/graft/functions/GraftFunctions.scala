@@ -10,10 +10,11 @@ import org.apache.spark.sql.types.DecimalType
 /** Scalar function library (SURVEY.md §2.1 S8/S9/S14/S18 + helpers).
   *
   * Everything here prefers codegen'd `org.apache.spark.sql.functions`
-  * built-ins; the only Scala UDF is the strict hex→UTF-8 decoder whose
-  * null-on-invalid semantics (reference: omni_rpc_client.py:100-114,
+  * built-ins; the strict hex→UTF-8 decoder, whose null-on-invalid
+  * semantics (reference: omni_rpc_client.py:100-114,
   * `codecs.decode(data, "hex")` + strict UTF-8 decode, null + log on
-  * failure) Spark's lenient `decode` (U+FFFD substitution) cannot match.
+  * failure) Spark's lenient `decode` (U+FFFD substitution) cannot match,
+  * is the native [[HexDecodeUtf8]] expression.
   */
 object GraftFunctions {
 
@@ -42,7 +43,10 @@ object GraftFunctions {
     catch { case _: CharacterCodingException => null }
   }
 
-  val hexDecodeUtf8 = udf(hexDecodeUtf8Strict _)
+  /** Strict hex→UTF-8 decode as a Column: the native [[HexDecodeUtf8]]
+    * expression, which stays inside whole-stage codegen;
+    * [[hexDecodeUtf8Strict]] is its reference. */
+  def hexDecodeUtf8(c: Column): Column = HexDecodeUtf8.column(c)
 
   /** Lenient variant built purely from codegen'd built-ins — use when
     * inputs are known-valid (stays inside whole-stage codegen). */

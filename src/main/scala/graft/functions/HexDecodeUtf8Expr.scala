@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -42,8 +42,13 @@ object HexDecodeHelper {
   *
   * Null contract: null input → null output (standard), but ALSO
   * non-null input may produce null (invalid hex / invalid UTF-8), so
-  * this cannot use defineCodeGen's non-null fast path. */
-case class HexDecodeUtf8(child: Expression) extends UnaryExpression {
+  * this cannot use defineCodeGen's non-null fast path.
+  *
+  * Input: a string; other atomic types are cast to one at analysis,
+  * and a complex type fails analysis. */
+case class HexDecodeUtf8(child: Expression) extends UnaryExpression
+    with ImplicitCastInputTypes {
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def prettyName: String = "hex_decode_utf8"

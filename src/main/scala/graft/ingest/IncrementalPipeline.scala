@@ -1,7 +1,8 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.functions.GraftFunctions
 
@@ -17,10 +18,11 @@ import graft.functions.GraftFunctions
   * against the sink so a retried run can never double-insert
   * (postgres_client.py:34-48 has no such key).
   *
-  * At scale: the watermark read is a partition-pruned MAX over the
-  * sink's `block` column (footer-only on block-sorted parquet); the
-  * delta fetch is a key-range predicate pushed to the source; the
-  * anti-join shuffles only the delta, never the sink history.
+  * At scale: the watermark read is one small commit-marker file the
+  * parquet sink keeps beside its data (a MAX pushed into the database
+  * on JDBC); the delta fetch is a key-range predicate pushed to the
+  * source; the anti-join shuffles only the delta, never the sink
+  * history.
   */
 object IncrementalPipeline {
 
@@ -175,21 +177,20 @@ object IncrementalPipeline {
     }
   }
 
-  /** S10: watermark = MAX(block) over the sink, null→0. */
-  def readWatermark(spark: SparkSession, sinkPath: String): Long = {
-    val exists = new java.io.File(sinkPath).exists()
-    if (!exists) 0L
-    else spark.read.parquet(sinkPath)
-      .agg(coalesce(max(col("block")), lit(0L))).first().getLong(0)
-  }
-
   /** Sink abstraction for the incremental append target. The pruning
     * contract is the point: `existingTxids(from)` must return only
     * txids with `block > from`, and implementations must make that a
     * PRUNED read — partition/row-group pruning on parquet, a WHERE
     * pushed into the database on JDBC — never a full-history scan.
     * (Round-2 shipped a full sink scan per batch; at 100 TB the
-    * idempotency check would have cost more than the ingest.) */
+    * idempotency check would have cost more than the ingest.)
+    *
+    * `watermark()` may read LOW, never high: a watermark below the
+    * sink's true MAX(block) only makes the next run refetch blocks the
+    * horizon anti-join then drops, so an implementation may answer
+    * from recorded state (the parquet sink's commit marker) instead of
+    * scanning. `append` must run exactly one action over `df`, so an
+    * observation the caller placed on it reports exactly once. */
   trait TxSink {
     def watermark(): Long
     /** txids already in the sink with block > fromExclusive, or None if
@@ -204,7 +205,24 @@ object IncrementalPipeline {
     * buckets overlapping the refetch horizon are listed), and rows are
     * sorted by block within files so row-group stats prune the rest.
     * The flat layout (None) keeps the original single-directory shape
-    * and still gets row-group pruning from the sort. */
+    * and still gets row-group pruning from the sort.
+    *
+    * Commit marker: after each append that lands rows, `_graft_commit`
+    * records the sink's watermark (MAX(block) over every row committed
+    * through the sink, observed on the write itself) and its read
+    * schema (the written frame's, plus `block_bucket` when bucketed).
+    * `watermark()` then reads one small file and runs no Spark job, and
+    * the layout check and the horizon read use the recorded schema
+    * instead of inferring it from the files. The marker is replaced by
+    * an atomic rename after the data files land, so a crash between
+    * the two (or an append that bypasses this class) leaves it
+    * stale-LOW: the next run refetches from (stale watermark − overlap)
+    * and the horizon anti-join drops the rows that already landed —
+    * the partial-append argument of [[runOnce]]. A sink without a
+    * marker (written before markers existed) is scanned once for
+    * MAX(block) and its schema, and the marker is written then; delete
+    * `_graft_commit` to force that rescan. Spark's file listing skips
+    * names starting with `_`, so readers of the directory never see it. */
   final class ParquetTxSink(spark: SparkSession, path: String,
       bucketBlocks: Option[Long] = None) extends TxSink {
     private def exists = new java.io.File(path).exists()
@@ -224,9 +242,27 @@ object IncrementalPipeline {
       else Some(new String(java.nio.file.Files.readAllBytes(sidecar.toPath),
         "UTF-8").trim.toLong)
 
-    private def validateLayout(): Unit = {
-      if (!exists) return
-      val hasBucketCol = spark.read.parquet(path).columns.contains("block_bucket")
+    private def marker = new java.io.File(path, ParquetTxSink.MarkerName)
+
+    /** The sink's committed state, or None if the sink doesn't exist.
+      * Falls back to one scan (recorded as the marker) when the sink has
+      * no marker. */
+    private def committed(): Option[ParquetTxSink.Commit] =
+      if (!exists) None
+      else if (marker.exists()) Some(ParquetTxSink.Commit.read(marker))
+      else {
+        val df = spark.read.parquet(path)
+        val c = ParquetTxSink.Commit(
+          df.agg(coalesce(max(col("block")), lit(0L))).first().getLong(0),
+          df.schema)
+        c.write(marker)
+        Some(c)
+      }
+
+    /** [[committed]], after checking the configured layout against the
+      * sidecar and the committed schema. */
+    private def validated(): Option[ParquetTxSink.Commit] = committed().map { c =>
+      val hasBucketCol = c.schema.fieldNames.contains("block_bucket")
       (bucketBlocks, recordedBucketBlocks) match {
         case (Some(n), Some(m)) if n != m =>
           throw new IllegalStateException(
@@ -252,42 +288,83 @@ object IncrementalPipeline {
               " but this sink is configured flat")
         case _ => ()
       }
+      c
     }
 
-    override def watermark(): Long =
-      if (!exists) 0L
-      else {
-        validateLayout()
-        spark.read.parquet(path)
-          .agg(coalesce(max(col("block")), lit(0L))).first().getLong(0)
-      }
+    override def watermark(): Long = validated().fold(0L)(_.watermark)
 
     override def existingTxids(fromExclusive: Long): Option[DataFrame] =
-      if (!exists) None
-      else {
-        validateLayout()
-        var df = spark.read.parquet(path)
+      validated().map { c =>
+        var df = spark.read.schema(c.schema).parquet(path)
         bucketBlocks.foreach { n =>
           df = df.filter(col("block_bucket") >= lit(fromExclusive / n))
         }
-        Some(df.filter(col("block") > fromExclusive).select("txid"))
+        df.filter(col("block") > fromExclusive).select("txid")
       }
 
     override def append(df: DataFrame): Unit = {
-      validateLayout()
-      val w = bucketBlocks match {
-        case Some(n) =>
-          df.withColumn("block_bucket", floor(col("block") / n))
-            .sortWithinPartitions("block")
-            .write.partitionBy("block_bucket")
-        case None => df.sortWithinPartitions("block").write
+      val before = validated()
+      val dir = new java.io.File(path)
+      val present = Option(dir.list()).fold(Set.empty[String])(_.toSet)
+      val written = Observation()
+      val observed = df.observe(written, max(col("block")).as("wm"), count(lit(1)).as("n"))
+      val frame = bucketBlocks.fold(observed)(n =>
+        observed.withColumn("block_bucket", floor(col("block") / n)))
+      val w = frame.sortWithinPartitions("block").write.mode(SaveMode.Append)
+      (if (bucketBlocks.isDefined) w.partitionBy("block_bucket") else w).parquet(path)
+      val m = written.get
+      if (m("n") == 0L) {
+        // nothing landed, so undo what the write added: Spark leaves an
+        // empty file in a flat sink, and a new bucketed sink would not
+        // even be readable. The marker and watermark stay as they were.
+        Option(dir.listFiles()).toSeq.flatten.filterNot(f => present(f.getName))
+          .foreach(ParquetTxSink.deleteTree)
+        if (before.isEmpty) dir.delete()
+        return
       }
-      w.mode(SaveMode.Append).parquet(path)
       bucketBlocks.foreach { n =>
         if (!sidecar.exists())
           java.nio.file.Files.write(sidecar.toPath,
             n.toString.getBytes("UTF-8"))
       }
+      val wm = Option(m("wm")).fold(0L)(_.asInstanceOf[Number].longValue)
+      ParquetTxSink.Commit(math.max(before.fold(0L)(_.watermark), wm),
+        frame.schema).write(marker)
+    }
+  }
+
+  object ParquetTxSink {
+    private val MarkerName = "_graft_commit"
+
+    /** The commit marker's content: `{"watermark": N, "schema": <Spark
+      * schema JSON>}`. */
+    private[ingest] final case class Commit(watermark: Long, schema: StructType) {
+      /** Write-then-rename, so a reader sees the old marker or the new
+        * one, never a torn file. */
+      def write(to: java.io.File): Unit = {
+        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+        val node = mapper.createObjectNode()
+        node.put("watermark", watermark)
+        node.set[com.fasterxml.jackson.databind.JsonNode]("schema", mapper.readTree(schema.json))
+        val tmp = new java.io.File(to.getParentFile, to.getName + ".tmp")
+        java.nio.file.Files.write(tmp.toPath, mapper.writeValueAsBytes(node))
+        java.nio.file.Files.move(tmp.toPath, to.toPath,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      }
+    }
+
+    private[ingest] object Commit {
+      def read(from: java.io.File): Commit = {
+        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(from)
+        Commit(node.get("watermark").asLong(),
+          DataType.fromJson(node.get("schema").toString).asInstanceOf[StructType])
+      }
+    }
+
+    private def deleteTree(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(deleteTree))
+      f.delete()
     }
   }
 
@@ -351,8 +428,9 @@ object IncrementalPipeline {
         .mode(SaveMode.Append).save()
   }
 
-  /** S7+S8+S9: the row transform — filter, strict hex decode, blockdate
-    * derivation (omni_rpc_client.py:100-126). */
+  /** S7+S8+S9: the row transform — filter, strict hex decode (the
+    * native expression), blockdate derivation
+    * (omni_rpc_client.py:100-126). */
   def transform(raw: DataFrame): DataFrame =
     raw.filter(col("type_int") === 200 && col("data").isNotNull)
       .withColumn("decoded_data", GraftFunctions.hexDecodeUtf8(col("data")))
@@ -371,7 +449,15 @@ object IncrementalPipeline {
     * refetching it and anti-joining the horizon makes the retry exact)
     * while keeping both the source fetch and the sink scan pruned to a
     * bounded window — duplicates are structurally impossible outside
-    * it, so scanning history beyond the horizon buys nothing. */
+    * it, so scanning history beyond the horizon buys nothing. The same
+    * argument covers a sink whose watermark reads stale-low (the
+    * parquet sink's marker after a crash between its data files and
+    * the marker): the refetch starts lower and the anti-join drops
+    * what already landed.
+    *
+    * The appended count is observed on the frame the sink writes, so
+    * the delta is computed once, by the write itself; an empty delta
+    * still reaches `sink.append`, which must leave the sink as it was. */
   def runOnce(spark: SparkSession, source: BlockSource, sink: TxSink,
       overlap: Long = 1L): RunResult = {
     val last = sink.watermark()
@@ -387,13 +473,11 @@ object IncrementalPipeline {
     sink.existingTxids(from).foreach { existing =>
       delta = delta.join(existing, Seq("txid"), "left_anti")
     }
-    val toWrite = delta
+    val appended = Observation()
+    sink.append(delta
       .withColumn("insert_dt", current_timestamp()) // S12 audit column
-      .cache()
-    val n = toWrite.count()
-    if (n > 0) sink.append(toWrite)
-    toWrite.unpersist()
-    RunResult(last, current, n)
+      .observe(appended, count(lit(1)).as("n")))
+    RunResult(last, current, appended.get("n").asInstanceOf[Long])
   }
 
   def runOnce(spark: SparkSession, source: BlockSource, sinkPath: String): RunResult =

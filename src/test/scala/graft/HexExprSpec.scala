@@ -58,4 +58,14 @@ class HexExprSpec extends AnyFunSuite {
       "hex_decode_utf8('zz') AS bad").first()
     assert(r.getString(0) == "hello" && r.isNullAt(1))
   }
+
+  test("input types: an array fails at analysis; an integer is cast to its digits") {
+    import spark.implicits._
+    val df = Seq((Seq("6869"), 6869)).toDF("a", "i")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(HexDecodeUtf8.column(col("a")))
+    }
+    assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+    assert(df.select(HexDecodeUtf8.column(col("i"))).first().getString(0) == "hi")
+  }
 }

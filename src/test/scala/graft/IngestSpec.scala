@@ -25,6 +25,39 @@ class IngestSpec extends AnyFunSuite {
   private def hex(s: String): String =
     s.getBytes("UTF-8").map("%02x".format(_)).mkString
 
+  /** Spark jobs started by `body` on this thread. A sentinel job closes
+    * the window: listener events arrive in order, so once its start is
+    * seen every job of `body` has been counted. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.ingest.probe")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.ingest.probe", tag)
+    try {
+      val out = body
+      sc.setLocalProperty("graft.ingest.probe", tag + "-end")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(tag + "-end") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(tag + "-end"), "sentinel job never reached the listener")
+      (out, seen.toArray.count(_ == tag))
+    } finally {
+      sc.setLocalProperty("graft.ingest.probe", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Valid type-200 rows `t<b>` at blocks `bs`. */
+  private def validRows(bs: Seq[Long]): Seq[(String, Long, java.lang.Long, Int, String, String)] =
+    bs.map(b => (s"t$b", b, java.lang.Long.valueOf(1700000000L + b * 60), 200, "0.1", hex(s"p$b")))
+
   test("first run ingests only type 200 with data; decode + blockdate derived") {
     val src = mkSource(Seq(
       ("t1", 10L, 1700000000L, 200, "0.1", hex("hello")),
@@ -262,5 +295,106 @@ class IngestSpec extends AnyFunSuite {
     val r = IncrementalPipeline.runOnce(spark, new FileBlockSource(spark, src2), sink)
     assert(r.appended == 1L)
     assert(spark.read.parquet(sink).agg(max(col("block"))).first().getLong(0) == 2L)
+  }
+
+  test("transform decodes with the native expression, no Scala UDF") {
+    val src = mkSource(validRows(Seq(1L)))
+    val plan = IncrementalPipeline.transform(spark.read.parquet(src)).queryExecution.analyzed
+    val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(!exprs.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF]),
+      plan.toString)
+    assert(exprs.exists(_.isInstanceOf[graft.functions.HexDecodeUtf8]), plan.toString)
+  }
+
+  test("parquet sink: watermark reads the commit marker with no Spark job; cycles cost the same jobs") {
+    val sinkDir = Files.createTempDirectory("graft-sinkm").toString + "/txs"
+    val sink = new IncrementalPipeline.ParquetTxSink(spark, sinkDir, bucketBlocks = Some(4L))
+    val jobs = (1 to 6).map { c =>
+      val src = new FileBlockSource(spark, mkSource(validRows(1L to 3L * c)))
+      val (r, n) = jobsDuring(IncrementalPipeline.runOnce(spark, src, sink))
+      assert(r.appended == 3L && r.currentBlock == 3L * c)
+      n
+    }
+    assert(new java.io.File(sinkDir, "_graft_commit").exists())
+    val (wm, wmJobs) = jobsDuring(sink.watermark())
+    assert(wm == 18L && wmJobs == 0, s"watermark $wm ran $wmJobs jobs")
+    // the first cycle meets an empty sink (no anti-join); from then on a
+    // cycle's job count does not grow with the sink
+    assert(jobs.tail.distinct.size == 1, s"jobs per cycle: $jobs")
+    assert(spark.read.parquet(sinkDir).count() == 18L)
+  }
+
+  test("parquet sink: a stale-low marker (crash before the marker) re-appends nothing twice") {
+    for (bucket <- Seq(None, Some(4L))) {
+      val sinkDir = Files.createTempDirectory("graft-sinkc").toString + "/txs"
+      val marker = new java.io.File(sinkDir, "_graft_commit").toPath
+      val sink = new IncrementalPipeline.ParquetTxSink(spark, sinkDir, bucket)
+      def run(head: Long) = IncrementalPipeline.runOnce(spark,
+        new FileBlockSource(spark, mkSource(validRows(1L to head))), sink)
+      assert(run(3L).appended == 3L)
+      val old = Files.readAllBytes(marker)
+      assert(run(6L).appended == 3L && sink.watermark() == 6L)
+      // the files of blocks 4..6 landed, the marker did not
+      Files.write(marker, old)
+      assert(sink.watermark() == 3L)
+      val r = run(8L)
+      assert(r.lastBlock == 3L && r.appended == 2L, s"$bucket: $r")
+      val txids = spark.read.parquet(sinkDir).select("txid").collect().map(_.getString(0))
+      assert(txids.sorted.toSeq == (1 to 8).map(b => s"t$b").sorted, s"$bucket")
+      assert(sink.watermark() == 8L)
+    }
+  }
+
+  test("parquet sink: a sink without a marker is scanned once, then reads the marker") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-sinkp").toString
+    val rows = Seq(("a", 4L), ("b", 9L), ("c", 7L)).toDF("txid", "block")
+    val flat = base + "/flat"
+    rows.write.parquet(flat)
+    val bucketed = base + "/bucketed"
+    rows.withColumn("block_bucket", floor(col("block") / 4L))
+      .write.partitionBy("block_bucket").parquet(bucketed)
+    Files.write(new java.io.File(bucketed, "_graft_bucket_blocks").toPath, "4".getBytes("UTF-8"))
+    for ((dir, bucket) <- Seq(flat -> None, bucketed -> Some(4L))) {
+      val sink = new IncrementalPipeline.ParquetTxSink(spark, dir, bucket)
+      val marker = new java.io.File(dir, "_graft_commit")
+      assert(!marker.exists())
+      val (wm, scanJobs) = jobsDuring(sink.watermark())
+      assert(wm == 9L && scanJobs >= 1 && marker.exists(), s"$dir: $wm / $scanJobs")
+      assert(jobsDuring(sink.watermark()) == (9L, 0))
+      assert(sink.existingTxids(5L).get.collect().map(_.getString(0)).sorted.toSeq ==
+        Seq("b", "c"))
+      // deleting the marker forces the rescan
+      assert(marker.delete())
+      assert(jobsDuring(sink.watermark())._2 >= 1 && marker.exists())
+    }
+  }
+
+  test("parquet sink: an empty delta appends 0 rows and leaves the sink and watermark as they were") {
+    val base = Files.createTempDirectory("graft-sinke").toString
+    // rows that the transform filters away (type 100) or that the anti-join drops
+    val invalid = Seq(("x1", 3L, java.lang.Long.valueOf(1700000000L), 100, "0", hex("x")))
+    for (bucket <- Seq(None, Some(4L))) {
+      val dir = base + "/" + bucket.fold("flat")(n => s"b$n")
+      val sink = new IncrementalPipeline.ParquetTxSink(spark, dir, bucket)
+      def run(rows: Seq[(String, Long, java.lang.Long, Int, String, String)]) =
+        IncrementalPipeline.runOnce(spark, new FileBlockSource(spark, mkSource(rows)), sink)
+      // new sink: no directory is left behind
+      val r0 = run(invalid)
+      assert(r0.currentBlock == 3L && r0.appended == 0L)
+      assert(sink.watermark() == 0L && sink.existingTxids(0L).isEmpty)
+      assert(!new java.io.File(dir).exists(), s"$bucket")
+      // existing sink: filtered away, then anti-joined away
+      assert(run(validRows(Seq(1L, 2L))).appended == 2L)
+      val files = new java.io.File(dir).list().toSet
+      val r1 = run(validRows(Seq(1L, 2L)) ++ invalid)
+      assert(r1.lastBlock == 2L && r1.appended == 0L)
+      val replay = ("t2", 4L, java.lang.Long.valueOf(1700000000L), 200, "0", hex("p2"))
+      val r2 = run(validRows(Seq(1L, 2L)) :+ replay)
+      assert(r2.lastBlock == 2L && r2.appended == 0L)
+      assert(sink.watermark() == 2L)
+      assert(new java.io.File(dir).list().toSet == files, s"$bucket")
+      assert(spark.read.parquet(dir).count() == 2L, s"$bucket")
+    }
   }
 }
