@@ -10,9 +10,10 @@ import graft.sinks.Sinks
 /** The engine's top-level entry point — end-to-end mirror of the
   * reference's `mf query` lifecycle (SURVEY.md §3.1):
   *
-  *   request (IR #1) → dataflow plan (IR #2 = Catalyst logical plan) →
-  *   rendered SQL (IR #3) → execute → present (text table / CSV / empty
-  *   message), plus the compile-only `dumpQueries` fan-out (§3.2).
+  *   request (IR #1) → rendered SQL (IR #3) → dataflow plan (IR #2 =
+  *   the Catalyst plan of that SQL) → execute → present (text table /
+  *   CSV / empty message), plus the compile-only `dumpQueries` fan-out
+  *   (§3.2).
   *
   * The process→warehouse boundary of the reference collapses to
   * driver→executors at each shuffle/action.

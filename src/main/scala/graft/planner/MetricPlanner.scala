@@ -1,17 +1,23 @@
 package graft.planner
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, expr}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.functions.broadcast
 
 import graft.catalog._
 import graft.sources.Tables
 
-/** Compiled form of a metric query: the lazily-composed DataFrame (IR #2,
-  * the Catalyst logical plan — parity with the reference's dataflow plan,
-  * dbt_query.py:117) and rendered SQL text (IR #3, parity with
-  * `rendered_sql`, dbt_query.py:100-104). The SQL is in the portable
-  * Spark∩DuckDB subset, so it doubles as the correctness oracle. */
-final case class CompiledMetricQuery(df: DataFrame, sql: String, sqlWithDescriptions: String)
+/** Compiled form of a metric query: the rendered SQL text (IR #3, parity
+  * with `rendered_sql`, dbt_query.py:100-104) and `df`, the analyzed
+  * Catalyst plan of exactly that text (IR #2 — parity with the
+  * reference's dataflow plan, dbt_query.py:117). The SQL is in the
+  * portable Spark∩DuckDB subset, so the text Spark runs is the text the
+  * DuckDB oracle checks. */
+final case class CompiledMetricQuery(df: DataFrame, sql: String)
 
 final case class ExplainResult(
     sql: String,
@@ -19,14 +25,17 @@ final case class ExplainResult(
     planText: String,
     dot: String)
 
-/** Request → DataFrame planner (SURVEY.md §2.2 M1–M11).
+/** Request → SQL → DataFrame planner (SURVEY.md §2.2 M1–M11).
   *
-  * Deliberately a *plain Scala* planner emitting declarative DataFrame
-  * ops: Catalyst then does predicate pushdown, column pruning, join
-  * selection and AQE re-planning with zero custom rules. Dimension
-  * tables flagged `small` get an explicit `broadcast()` hint — at 100 TB
-  * the fact side never moves for those joins; non-small joins shuffle on
-  * their entity keys, which is the correct distributed plan.
+  * Deliberately a *plain Scala* planner: it renders each request once as
+  * declarative SQL, and [[compile]] runs that text. Catalyst then does
+  * predicate pushdown, column pruning, join selection and AQE
+  * re-planning with zero custom rules. Table names in the text bind to
+  * the request's own `Tables.load` frames — no session views — and
+  * dimension tables flagged `small` carry an explicit `broadcast()`
+  * hint: at 100 TB the fact side never moves for those joins; non-small
+  * joins shuffle on their entity keys, which is the correct distributed
+  * plan.
   */
 final class MetricPlanner(val registry: SemanticRegistry) {
 
@@ -133,175 +142,101 @@ final class MetricPlanner(val registry: SemanticRegistry) {
       case None => req
     }
 
-  def compile(spark: SparkSession, dir: String, req0: MetricQueryRequest): CompiledMetricQuery = {
-    val req = resolve(req0)
-    require(req.metrics.nonEmpty, "at least one metric required")
-    if (req.metrics.exists(registry.conversionByName.contains))
-      return compileConversion(spark, dir, req)
-    // derived (ratio) metrics expand to their base inputs for the
-    // aggregate; the derived columns are computed ON the aggregated
-    // frame — one pass over the fact regardless
-    val baseNames = registry.baseMetricsFor(req.metrics)
-    val ms = baseNames.map(registry.metric)
-    if (ms.map(_.model).distinct.size > 1)
-      return compileCrossModel(spark, dir, req, ms)
-    val factModel = ms.head.model
-
-    val timeDim = ms.head.timeDim.map(registry.dimensionByName)
-    val groupBys = req.groupBy.map(parseGroupBy(_, timeDim))
-
-    // -- which models must be joined in --------------------------------
-    val needed: Seq[String] =
-      (Seq(factModel) ++
-        groupBys.map { case (d, _, _) => registry.dimensionOwner(d.name) } ++
-        req.where.toSeq.flatMap(modelsReferenced) ++
-        ms.flatMap(_.filterSql).flatMap(modelsReferenced)).distinct
-
-    val linksInOrder: Seq[JoinLink] = needed
-      .flatMap(m => registry.joinPath(factModel, m))
-      .distinct
-
-    // -- DataFrame composition (IR #2: Catalyst logical plan) ----------
+  /** Compile a request: render its SQL once ([[renderSql]]) and run that
+    * text. The session's SQL parser parses it, and every model-table name
+    * in it — in the main query, in CTE bodies and in subquery
+    * expressions — binds to this request's own `Tables.load` frame,
+    * `broadcast()`-hinted when the model is `small`. Each table loads
+    * once per request, and nothing is registered in the session, so
+    * requests over different `dir`s never see each other's tables. CTE
+    * names never collide with model tables.
+    *
+    * One CTE binds differently: the offset shape's grain aggregate
+    * ([[OffsetCte]]), which both self-join sides read, binds to ONE lazy
+    * local checkpoint of its own bound body. Spark inlines a CTE per
+    * reference, and plan-level exchange reuse can't match the two copies
+    * (the join pushes an extra null-filter under the shifted side and
+    * re-aliases it), so without the checkpoint the FACT would be
+    * aggregated once per side. The checkpoint holds grain-cardinality
+    * rows (dozens), and being lazy it costs nothing until the query
+    * actually runs. */
+  def compile(spark: SparkSession, dir: String, req: MetricQueryRequest): CompiledMetricQuery = {
+    val sql = renderSql(req, withDescriptions = false)
+    val loaded = mutable.Map[String, LogicalPlan]()
     // Plain load: metric plans are probe+aggregate shaped — a
     // parallelism-floor exchange here costs more than the single-
     // partition probe saves (measured at sf0.1; see Tables.loadP docs
     // for where the floor DOES pay).
-    var joined = Tables.load(spark, dir, registry.modelByName(factModel).table)
-    for (l <- linksInOrder) {
-      val m = registry.modelByName(l.toModel)
-      val dimDf0 = Tables.load(spark, dir, m.table)
-      val dimDf = if (m.small) broadcast(dimDf0) else dimDf0
-      joined = joined.join(dimDf, expr(s"${l.fromCol} = ${m.key}"))
-    }
-
-    val timeFilterSql: Option[String] =
-      if (req.startTime.isEmpty && req.endTime.isEmpty) None
-      else {
-        val td = timeDim.getOrElse(sys.error("time constraint but metric has no time dimension"))
-        val parts =
-          req.startTime.map(s => s"${td.expr} >= TIMESTAMP '$s 00:00:00'").toSeq ++
-          req.endTime.map(e => s"${td.expr} <= TIMESTAMP '$e 00:00:00'")
-        Some(parts.mkString(" AND "))
+    def table(name: String): Option[LogicalPlan] =
+      registry.models.find(_.table == name).map { m =>
+        loaded.getOrElseUpdate(name, {
+          val df = Tables.load(spark, dir, name)
+          (if (m.small) broadcast(df) else df).queryExecution.analyzed
+        })
       }
-
-    // base filters (request where + time range) apply to every metric;
-    // a metric's own filterSql applies to its input rows only
-    val allFilters = req.where.toSeq ++ timeFilterSql
-
-    val groupCols: Seq[Column] =
-      groupBys.map { case (d, g, b) => expr(dimExpr(d, g)).as(outName(b, g)) }
-    val keyNames = groupBys.map { case (_, g, b) => outName(b, g) }
-
-    def aggregate(base: DataFrame, extraFilter: Option[String],
-        group: Seq[Metric]): DataFrame = {
-      var d = base
-      for (f <- allFilters ++ extraFilter) d = d.filter(expr(f))
-      val aggCols = group.map(m => expr(m.aggSql).as(m.name))
-      if (groupCols.nonEmpty) d.groupBy(groupCols: _*).agg(aggCols.head, aggCols.tail: _*)
-      else d.agg(aggCols.head, aggCols.tail: _*)
-    }
-
-    // one aggregate subquery per metric-filter group (MetricFlow's
-    // compiled shape); the common single-group case stays one pass
-    val filterGroups: Seq[(Option[String], Seq[Metric])] =
-      ms.map(_.filterSql).distinct.map(f => f -> ms.filter(_.filterSql == f))
-    var df =
-      if (filterGroups.size == 1)
-        aggregate(joined, filterGroups.head._1, ms)
-      else
-        filterGroups.map { case (f, group) => aggregate(joined, f, group) }
-          .reduce { (a, b) =>
-            // grain-cardinality join; grouped keys coalesce via USING.
-            // An ungrouped request aggregates to one row per group —
-            // a 1×1 cross join stitches the scalars back together.
-            if (keyNames.nonEmpty) a.join(b, keyNames, "full_outer")
-            else a.crossJoin(b)
-          }
-
-    // offset inputs (MetricFlow offset_window): LEFT-join the aggregate
-    // to itself with the time key shifted forward by the offset, so row
-    // (t) sees the input's value at (t - offset) under the alias. One
-    // join per distinct shift, all at GRAIN cardinality — Spark reuses
-    // the aggregate's exchange, and at 100 TB this joins dozens of rows
-    // regardless of fact size.
-    val offsets = offsetsFor(req)
-    if (offsets.nonEmpty) {
-      require(filterGroups.size == 1,
-        "offset metrics cannot mix with differently-filtered metrics in one request")
-      val (timeKey, _) = offsetTimeKey(groupBys, offsets)
-      // LAZY local checkpoint: both self-join sides share ONE
-      // materialization of the grain aggregate (plan-level exchange
-      // reuse can't match here — the join pushes an extra
-      // null-filter under the shifted side and re-aliases it, so
-      // without this the FACT would be scanned once per side). The
-      // checkpoint holds grain-cardinality rows (dozens), and being
-      // lazy it costs nothing until the query actually runs.
-      val agg = df.localCheckpoint(false)
-      df = agg
-      for (((n, grain), os) <- offsets.groupBy(o => (o.n, o.grain)).toSeq.sortBy(_._1)) {
-        val prevCols: Seq[Column] = keyNames.map { k =>
-          if (k == timeKey) expr(shiftKeySql(k, n, grain)).as(k)
-          else agg.col(k)
-        } ++ os.map(o => agg.col(o.input).as(o.alias))
-        df = df.join(agg.select(prevCols: _*), keyNames, "left")
+    def bind(plan: LogicalPlan, ctes: Map[String, LogicalPlan]): LogicalPlan = plan match {
+      case u @ UnresolvedRelation(Seq(name), _, _) =>
+        ctes.get(name).orElse(table(name)).map(SubqueryAlias(name, _)).getOrElse(u)
+      case w: UnresolvedWith =>
+        val (offset, rest) = w.cteRelations.partition(_._1 == OffsetCte)
+        val inner = ctes ++ offset.map { case (name, body, _) =>
+          name -> GraftSqlBridge.ofRows(spark, bind(body.child, ctes))
+            .localCheckpoint(false).queryExecution.analyzed
+        }
+        val child = bind(w.child, inner)
+        if (rest.isEmpty) child
+        else w.copy(child = child, cteRelations = rest.map { case (name, body, depth) =>
+          (name, body.copy(child = bind(body.child, inner)), depth)
+        })
+      case p => p.mapChildren(bind(_, ctes)).transformExpressions {
+        case s: SubqueryExpression => s.withNewPlan(bind(s.plan, ctes))
       }
     }
-
-    // derive ratio metrics on the aggregated frame, then keep only the
-    // requested metric columns (inputs pulled in solely for a derived
-    // metric don't leak into the output)
-    for (name <- req.metrics if registry.isDerived(name))
-      df = df.withColumn(name, expr(registry.derivedByName(name).exprSql))
-    df = df.select((groupBys.map { case (_, g, b) => outName(b, g) } ++
-      req.metrics).map(df.col): _*)
-
-    // deterministic order: requested keys first, then all group keys as
-    // tie-breakers so the output order is total (oracle-hash stable)
-    val orderCols: Seq[Column] = (req.orderBy.map { o =>
-      if (o.startsWith("-")) df.col(o.drop(1)).desc else df.col(o).asc
-    } ++ groupBys.map { case (_, g, b) => df.col(outName(b, g)).asc })
-    if (orderCols.nonEmpty) df = df.orderBy(orderCols: _*)
-    req.limit.foreach(n => df = df.limit(n))
-
-    CompiledMetricQuery(df, renderSql(req, withDescriptions = false),
-      renderSql(req, withDescriptions = true))
+    val plan = bind(GraftSqlBridge.parsePlan(spark, sql), Map.empty)
+    CompiledMetricQuery(GraftSqlBridge.ofRows(spark, plan), sql)
   }
 
-  /** Cross-model metric queries — MetricFlow's `metric_time` join:
-    * metrics from DIFFERENT fact models are each aggregated to the
-    * shared time grain over their OWN time dimension, then the per-fact
-    * aggregates are FULL OUTER JOINed on the grain key (a month where
-    * only one fact has rows keeps the other metric NULL, exactly
-    * MetricFlow's semantics).
-    *
-    * Scale shape: each fact aggregates independently with partial aggs
-    * (no fact-to-fact shuffle — the facts never join at row grain);
-    * the outer join runs at GRAIN cardinality (dozens of rows), which
-    * is why cross-model metrics stay cheap at 100 TB. Group-bys must
-    * be `metric_time__<gran>`; `where` is rejected here because a raw
-    * predicate cannot name a single owning fact. */
-  private def crossModelGrans(req: MetricQueryRequest): Seq[String] = {
+  /** The offset shape's grain-aggregate CTE (see [[compile]]). */
+  private val OffsetCte = "agg"
+
+  /** Grains of a cross-model or conversion request (`what` names the
+    * kind in errors). Group-bys must be `metric_time__<gran>`; `where`
+    * is rejected, because a raw predicate can name neither a single
+    * owning fact nor base vs conversion rows. */
+  private def metricTimeGrans(req: MetricQueryRequest, what: String): Seq[String] = {
     require(req.where.isEmpty,
-      "cross-model metric queries support metric_time group-bys and time constraints only")
-    val grans = req.groupBy.map { g =>
+      s"$what support metric_time group-bys and time constraints only")
+    req.groupBy.map { g =>
       g.split("__") match {
-        case Array("metric_time", gr)
-          if granularities(gr.toLowerCase) =>
-          gr.toLowerCase
-        case _ => sys.error(
-          s"cross-model queries group by metric_time__<granularity>, got: $g")
+        case Array("metric_time", gr) if granularities(gr.toLowerCase) => gr.toLowerCase
+        case _ => sys.error(s"$what group by metric_time__<granularity>, got: $g")
       }
     }
-    require(grans.nonEmpty, "cross-model queries need a metric_time group-by")
-    grans
   }
 
-  /** Metrics per fact model, in first-appearance order; each group's
-    * shared time dimension. */
-  /** One aggregate frame per (fact model, metric filter) pair — metric
+  /** The request's time-range predicates on `col` (midnight bounds,
+    * inclusive); `col` is evaluated only when a bound is set. */
+  private def timeRangeSql(req: MetricQueryRequest, col: => String): Seq[String] =
+    req.startTime.map(s => s"$col >= TIMESTAMP '$s 00:00:00'").toSeq ++
+      req.endTime.map(e => s"$col <= TIMESTAMP '$e 00:00:00'")
+
+  /** `ORDER BY` — requested keys first, then every group key as a
+    * tie-breaker so the output order is total (oracle-hash stable) —
+    * and `LIMIT`, each followed by its description note. */
+  private def orderLimitSql(req: MetricQueryRequest, keyNames: Seq[String],
+      orderNote: String = "", limitNote: String = ""): String = {
+    val items = req.orderBy.map { o =>
+      if (o.startsWith("-")) s"${o.drop(1)} DESC" else s"$o ASC"
+    } ++ keyNames.map(k => s"$k ASC")
+    (if (items.nonEmpty) s"\nORDER BY ${items.mkString(", ")}$orderNote" else "") +
+      req.limit.map(n => s"\nLIMIT $n$limitNote").getOrElse("")
+  }
+
+  /** One aggregate per (fact model, metric filter) pair — metric
     * filters sub-split a model's metrics exactly like the single-model
     * path; in cross-model mode a filter may reference only the fact's
-    * own columns (no dimension joins inside the per-fact aggregates). */
+    * own columns (no dimension joins inside the per-fact aggregates).
+    * Each group carries its shared time dimension. */
   private def crossModelGroups(ms: Seq[Metric]): Seq[(String, Option[String], Seq[Metric], Dimension)] =
     ms.map(m => (m.model, m.filterSql)).distinct.map { case (model, f) =>
       val group = ms.filter(m => m.model == model && m.filterSql == f)
@@ -312,154 +247,39 @@ final class MetricPlanner(val registry: SemanticRegistry) {
       (model, f, group, registry.dimensionByName(tds.head))
     }
 
-  private def compileCrossModel(spark: SparkSession, dir: String,
-      req: MetricQueryRequest, ms: Seq[Metric]): CompiledMetricQuery = {
-    val grans = crossModelGrans(req)
-    val keyNames = grans.map(gr => s"metric_time__$gr")
-
-    val frames = crossModelGroups(ms).map { case (model, mf, group, td) =>
-      var df = Tables.load(spark, dir, registry.modelByName(model).table)
-      val timeParts =
-        req.startTime.map(s => s"${td.expr} >= TIMESTAMP '$s 00:00:00'").toSeq ++
-        req.endTime.map(e => s"${td.expr} <= TIMESTAMP '$e 00:00:00'") ++ mf
-      for (f <- timeParts) df = df.filter(expr(f))
-      val keys = grans.map(gr =>
-        expr(timeKeySql(gr, td.expr)).as(s"metric_time__$gr"))
-      val aggs = group.map(m => expr(m.aggSql).as(m.name))
-      df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-    }
-    // full outer on the grain key: using-column joins coalesce the key
-    var df = frames.reduce((a, b) => a.join(b, keyNames, "full_outer"))
-
-    for (name <- req.metrics if registry.isDerived(name))
-      df = df.withColumn(name, expr(registry.derivedByName(name).exprSql))
-    df = df.select((keyNames ++ req.metrics).map(df.col): _*)
-
-    // NULL metric cells are expected here (a grain row one fact lacks);
-    // ordering stays on the never-null grain keys unless the caller
-    // orders explicitly
-    val orderCols = (req.orderBy.map { o =>
-      if (o.startsWith("-")) df.col(o.drop(1)).desc else df.col(o).asc
-    } ++ keyNames.map(df.col(_).asc))
-    df = df.orderBy(orderCols: _*)
-    req.limit.foreach(n => df = df.limit(n))
-
-    CompiledMetricQuery(df, renderSql(req, withDescriptions = false),
-      renderSql(req, withDescriptions = true))
-  }
-
   // ------------------------------------------------------ conversion
-  /** Shared request validation for conversion metrics: every requested
-    * metric must be a conversion metric (no mixing), group-bys are
-    * `metric_time__<gran>`, `where` is rejected (a raw predicate can't
-    * name base vs conversion rows). Returns (metrics, grans). */
-  private def conversionParts(req: MetricQueryRequest): (Seq[ConversionMetric], Seq[String]) = {
-    val cms = req.metrics.map(n => registry.conversionByName.getOrElse(n,
-      sys.error(s"cannot mix conversion metrics with other metrics: $n")))
-    require(req.where.isEmpty,
-      "conversion metric queries support metric_time group-bys and time constraints only")
-    val grans = req.groupBy.map { g =>
-      g.split("__") match {
-        case Array("metric_time", gr)
-          if granularities(gr.toLowerCase) =>
-          gr.toLowerCase
-        case _ => sys.error(
-          s"conversion metric queries group by metric_time__<granularity>, got: $g")
-      }
-    }
-    (cms, grans)
-  }
-
-  /** Distinct (model, entity, time, base, conversion, window) funnels
-    * among the requested metrics — each is aggregated once even when
-    * both `conversions` and `conversion_rate` are requested over it. */
-  private def conversionDefs(cms: Seq[ConversionMetric]) =
-    cms.map(m => (m.model, m.entity, m.timeDim, m.baseFilterSql,
-      m.conversionFilterSql, m.windowDays)).distinct
+  /** The funnel a conversion metric counts over. Distinct funnels among
+    * the requested metrics are each aggregated once, even when both
+    * `conversions` and `conversion_rate` are requested over one. */
+  private def funnel(m: ConversionMetric) =
+    (m.model, m.entity, m.timeDim, m.baseFilterSql, m.conversionFilterSql, m.windowDays)
 
   /** Conversion metrics (MetricFlow's fifth metric type): BASE events
-    * LEFT-SEMI-joined to CONVERSION events of the same entity inside
-    * the attribution window, then counted at the requested grain and
-    * LEFT-joined back to the base counts. A base event with ≥1
-    * conversion counts exactly once (semi-join semantics), so counts
-    * are deterministic regardless of how many conversions follow.
+    * with an `EXISTS` over CONVERSION events of the same entity inside
+    * the attribution window — a left-semi join, so a base event with ≥1
+    * conversion counts exactly once however many conversions follow —
+    * counted at the requested grain and LEFT-joined back to the base
+    * counts. Every requested metric must be a conversion metric (no
+    * mixing).
     *
     * Scale shape: the semi-join shuffles base and conversion rows on
     * the ENTITY key — the minimum possible co-location for funnel
     * attribution — and everything after it is grain-cardinality. The
-    * base and conversion frames are column-pruned slices of one fact
-    * scan each (predicate pushed); no row ever carries more than
+    * base and conversion rows are column-pruned slices of one fact scan
+    * each (predicate pushed); no row ever carries more than
     * (entity, time). */
-  private def compileConversion(spark: SparkSession, dir: String,
-      req: MetricQueryRequest): CompiledMetricQuery = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit}
-    val (cms, grans) = conversionParts(req)
-    val keyNames = grans.map(gr => s"metric_time__$gr")
-    val defs = conversionDefs(cms)
-
-    val frames = defs.zipWithIndex.map { case ((model, entity, timeDim, bf, cf, w), i) =>
-      val fact = Tables.load(spark, dir, registry.modelByName(model).table)
-      val timeParts =
-        req.startTime.map(s => s"$timeDim >= TIMESTAMP '$s 00:00:00'").toSeq ++
-        req.endTime.map(e => s"$timeDim <= TIMESTAMP '$e 00:00:00'")
-      val base = timeParts.foldLeft(fact.filter(expr(bf)))((d, f) => d.filter(expr(f)))
-        .select(col(entity).as("__entity"), col(timeDim).as("__ts"))
-      val conv = fact.filter(expr(cf))
-        .select(col(entity).as("__c_entity"), col(timeDim).as("__c_ts"))
-      val keys = grans.map(gr =>
-        expr(timeKeySql(gr, "__ts")).as(s"metric_time__$gr"))
-      def agg(d: DataFrame, as: String): DataFrame =
-        if (keys.nonEmpty) d.groupBy(keys: _*).agg(count(lit(1)).as(as))
-        else d.agg(count(lit(1)).as(as))
-      val b = agg(base, s"__base$i")
-      val converted = base.join(conv,
-        col("__entity") === col("__c_entity") &&
-          col("__c_ts") > col("__ts") &&
-          col("__c_ts") <= expr(s"__ts + INTERVAL $w DAY"),
-        "left_semi")
-      val c = agg(converted, s"__conv$i")
-      val joined = if (keyNames.nonEmpty) b.join(c, keyNames, "left") else b.crossJoin(c)
-      joined.withColumn(s"__conv$i", coalesce(col(s"__conv$i"), lit(0L)))
-    }
-    var df = frames.reduce { (a, b) =>
-      if (keyNames.nonEmpty) a.join(b, keyNames, "full_outer") else a.crossJoin(b)
-    }
-    for (m <- cms) {
-      val i = defs.indexOf((m.model, m.entity, m.timeDim, m.baseFilterSql,
-        m.conversionFilterSql, m.windowDays))
-      // After the cross-funnel FULL OUTER reduce, a grain key absent from
-      // funnel i has NULL __conv$i / __base$i. Conversions coalesce to 0
-      // (no base events ⇒ 0 conversions); the rate keeps its NULL
-      // denominator ⇒ NULL, matching the rendered SQL exactly.
-      df = df.withColumn(m.name, m.calculation match {
-        case "conversions" => coalesce(col(s"__conv$i"), lit(0L))
-        case "conversion_rate" =>
-          coalesce(col(s"__conv$i"), lit(0L)).cast("double") / col(s"__base$i")
-      })
-    }
-    df = df.select((keyNames ++ req.metrics).map(df.col): _*)
-    val orderCols = (req.orderBy.map { o =>
-      if (o.startsWith("-")) df.col(o.drop(1)).desc else df.col(o).asc
-    } ++ keyNames.map(df.col(_).asc))
-    if (orderCols.nonEmpty) df = df.orderBy(orderCols: _*)
-    req.limit.foreach(n => df = df.limit(n))
-    CompiledMetricQuery(df, renderSql(req, withDescriptions = false),
-      renderSql(req, withDescriptions = true))
-  }
-
   private def renderConversionSql(req: MetricQueryRequest,
       withDescriptions: Boolean): String = {
-    val (cms, grans) = conversionParts(req)
+    val cms = req.metrics.map(n => registry.conversionByName.getOrElse(n,
+      sys.error(s"cannot mix conversion metrics with other metrics: $n")))
+    val grans = metricTimeGrans(req, "conversion metric queries")
     val keyNames = grans.map(gr => s"metric_time__$gr")
-    val defs = conversionDefs(cms)
+    val defs = cms.map(funnel).distinct
     def desc(s: String): String = if (withDescriptions) s"  -- $s" else ""
 
     val ctes = defs.zipWithIndex.flatMap { case ((model, entity, timeDim, bf, cf, w), i) =>
       val table = registry.modelByName(model).table
-      val timeParts =
-        req.startTime.map(s => s"$timeDim >= TIMESTAMP '$s 00:00:00'").toSeq ++
-        req.endTime.map(e => s"$timeDim <= TIMESTAMP '$e 00:00:00'")
-      val baseWhere = (Seq(bf) ++ timeParts).mkString(" AND ")
+      val baseWhere = (bf +: timeRangeSql(req, timeDim)).mkString(" AND ")
       val keyItems = grans.map(gr =>
         s"${timeKeySql(gr, "ts")} AS metric_time__$gr")
       def groupBy(n: Int): String =
@@ -478,8 +298,7 @@ final class MetricPlanner(val registry: SemanticRegistry) {
           desc("base events with >=1 conversion in the window, counted once"))
     }
     def metricItem(m: ConversionMetric): String = {
-      val i = defs.indexOf((m.model, m.entity, m.timeDim, m.baseFilterSql,
-        m.conversionFilterSql, m.windowDays))
+      val i = defs.indexOf(funnel(m))
       val item = m.calculation match {
         case "conversions" => s"COALESCE(c$i.conversions, 0) AS ${m.name}"
         case "conversion_rate" =>
@@ -488,8 +307,8 @@ final class MetricPlanner(val registry: SemanticRegistry) {
       item + (if (withDescriptions && m.description.nonEmpty) s"  -- ${m.description}" else "")
     }
     // Grain keys must survive a key present in only ONE funnel's b_i:
-    // COALESCE across every b_i mirrors the DataFrame's USING-join key
-    // coalescing (b0.k alone would be NULL for such keys).
+    // COALESCE across every b_i, as a USING join coalesces its key
+    // (b0.k alone would be NULL for such keys).
     def keyExpr(k: String): String =
       if (defs.length == 1) s"b0.$k"
       else s"COALESCE(${defs.indices.map(i => s"b$i.$k").mkString(", ")})"
@@ -502,8 +321,8 @@ final class MetricPlanner(val registry: SemanticRegistry) {
         if (i == 0) Nil
         else if (keyNames.isEmpty) Seq(s"CROSS JOIN b$i")
         else {
-          // Progressive key coalescing ≡ the DataFrame's chained USING
-          // joins: b_i must match keys introduced by ANY earlier funnel.
+          // Progressive key coalescing ≡ chained USING joins: b_i must
+          // match keys introduced by ANY earlier funnel.
           def priorKey(k: String): String =
             if (i == 1) s"b0.$k"
             else s"COALESCE(${(0 until i).map(j => s"b$j.$k").mkString(", ")})"
@@ -511,27 +330,32 @@ final class MetricPlanner(val registry: SemanticRegistry) {
         }
       bJoin ++ cJoin
     }.mkString("\n")
-    val orderExprs = (req.orderBy.map { o =>
-      if (o.startsWith("-")) s"${o.drop(1)} DESC" else s"$o ASC"
-    } ++ keyNames.map(k => s"$k ASC")).mkString(", ")
     s"WITH ${ctes.mkString(",\n")}" +
       s"\nSELECT ${selectItems.mkString(",\n       ")}\nFROM b0\n$joins" +
-      desc("funnel attribution at grain cardinality") +
-      (if (orderExprs.nonEmpty) s"\nORDER BY $orderExprs" else "") +
-      req.limit.map(n => s"\nLIMIT $n").getOrElse("")
+      desc("funnel attribution at grain cardinality") + orderLimitSql(req, keyNames)
   }
 
+  /** Cross-model metric queries — MetricFlow's `metric_time` join:
+    * metrics from DIFFERENT fact models are each aggregated to the
+    * shared time grain over their OWN time dimension, then the per-fact
+    * aggregates are FULL OUTER JOINed on the grain key (a month where
+    * only one fact has rows keeps the other metric NULL, exactly
+    * MetricFlow's semantics).
+    *
+    * Scale shape: each fact aggregates independently with partial aggs
+    * (no fact-to-fact shuffle — the facts never join at row grain);
+    * the outer join runs at GRAIN cardinality (dozens of rows), which
+    * is why cross-model metrics stay cheap at 100 TB. */
   private def renderCrossModelSql(req: MetricQueryRequest, ms: Seq[Metric],
       withDescriptions: Boolean): String = {
-    val grans = crossModelGrans(req)
+    val grans = metricTimeGrans(req, "cross-model metric queries")
+    require(grans.nonEmpty, "cross-model queries need a metric_time group-by")
     val keyNames = grans.map(gr => s"metric_time__$gr")
     def desc(s: String): String = if (withDescriptions) s"  -- $s" else ""
 
     val groups = crossModelGroups(ms)
     val ctes = groups.zipWithIndex.map { case ((model, mf, group, td), i) =>
-      val timeParts =
-        req.startTime.map(s => s"${td.expr} >= TIMESTAMP '$s 00:00:00'").toSeq ++
-        req.endTime.map(e => s"${td.expr} <= TIMESTAMP '$e 00:00:00'") ++ mf
+      val timeParts = timeRangeSql(req, td.expr) ++ mf
       val keyItems = grans.map(gr =>
         s"${timeKeySql(gr, td.expr)} AS metric_time__$gr")
       val aggItems = group.map(m => s"${m.aggSql} AS ${m.name}")
@@ -546,14 +370,10 @@ final class MetricPlanner(val registry: SemanticRegistry) {
       if (registry.isDerived(n)) s"${metricExpr(n)} AS $n" else n)
     val joins = groups.indices.tail.map(i =>
       s"FULL OUTER JOIN m$i USING (${keyNames.mkString(", ")})").mkString("\n")
-    val orderExprs = (req.orderBy.map { o =>
-      if (o.startsWith("-")) s"${o.drop(1)} DESC" else s"$o ASC"
-    } ++ keyNames.map(k => s"$k ASC")).mkString(", ")
-    val limit = req.limit.map(n => s"\nLIMIT $n").getOrElse("")
     s"WITH ${ctes.mkString(",\n")}" + desc("one aggregate per fact model") +
       s"\nSELECT ${selectItems.mkString(", ")}" +
       s"\nFROM m0\n$joins" + desc("metric_time join at grain cardinality") +
-      s"\nORDER BY $orderExprs$limit"
+      orderLimitSql(req, keyNames)
   }
 
   /** Render the request as SQL (IR #3). With `withDescriptions`, inline
@@ -562,6 +382,7 @@ final class MetricPlanner(val registry: SemanticRegistry) {
     * dbt_query.py:36-40,100-104). */
   def renderSql(req0: MetricQueryRequest, withDescriptions: Boolean): String = {
     val req = resolve(req0)
+    require(req.metrics.nonEmpty, "at least one metric required")
     if (req.metrics.exists(registry.conversionByName.contains))
       return renderConversionSql(req, withDescriptions)
     val ms = registry.baseMetricsFor(req.metrics).map(registry.metric)
@@ -599,16 +420,12 @@ final class MetricPlanner(val registry: SemanticRegistry) {
       groupBys.map { case (d, g, b) => s"${dimExpr(d, g)} AS ${outName(b, g)}" } ++
       req.metrics.map(n => s"${metricSql(n)} AS $n" + metricDesc(n))
 
-    val timeFilter =
-      (req.startTime.map(s => s"${timeDim.get.expr} >= TIMESTAMP '$s 00:00:00'").toSeq ++
-       req.endTime.map(e => s"${timeDim.get.expr} <= TIMESTAMP '$e 00:00:00'")).toList
-
-    val baseWhere = req.where.toSeq ++ timeFilter
+    // base filters (request where + time range) apply to every metric;
+    // a metric's own filterSql applies to its input rows only
+    val baseWhere = req.where.toSeq ++ timeRangeSql(req, timeDim.getOrElse(
+      sys.error("time constraint but metric has no time dimension")).expr)
     val groupExprs = groupBys.map { case (d, g, _) => dimExpr(d, g) }
     val keyNames = groupBys.map { case (_, g, b) => outName(b, g) }
-    val orderExprs = (req.orderBy.map { o =>
-      if (o.startsWith("-")) s"${o.drop(1)} DESC" else s"$o ASC"
-    } ++ keyNames.map(k => s"$k ASC"))
 
     def fromJoins: String = {
       val sb = new StringBuilder
@@ -642,7 +459,7 @@ final class MetricPlanner(val registry: SemanticRegistry) {
         groupBys.map { case (d, g, b) => s"${dimExpr(d, g)} AS ${outName(b, g)}" } ++
         ms.map(m => s"${m.aggSql} AS ${m.name}")
       val where = baseWhere ++ filterGroups.head._1
-      val cte = s"agg AS (\n  SELECT ${aggItems.mkString(",\n         ")}" +
+      val cte = s"$OffsetCte AS (\n  SELECT ${aggItems.mkString(",\n         ")}" +
         s"\n  ${fromJoins.replace("\n", "\n  ")}" +
         (if (where.nonEmpty) s"\n  WHERE ${where.mkString(" AND ")}" else "") +
         (if (groupBys.nonEmpty)
@@ -665,13 +482,12 @@ final class MetricPlanner(val registry: SemanticRegistry) {
       val joins = shifts.zipWithIndex.map { case (((n, grain), _), i) =>
         val conds = s"a.$timeKey = ${shiftKeySql(s"p$i.$timeKey", n, grain)}" +:
           keyNames.filter(_ != timeKey).map(k => s"a.$k = p$i.$k")
-        s"LEFT JOIN agg p$i ON ${conds.mkString(" AND ")}" +
+        s"LEFT JOIN $OffsetCte p$i ON ${conds.mkString(" AND ")}" +
           desc(s"prior-period self-join (offset $n $grain, grain cardinality)")
       }.mkString("\n")
       return s"WITH $cte" + desc("one aggregate pass; offsets join it to itself") +
-        s"\nSELECT ${outItems.mkString(", ")}\nFROM agg a\n$joins" +
-        (if (orderExprs.nonEmpty) s"\nORDER BY ${orderExprs.mkString(", ")}" else "") +
-        req.limit.map(n => s"\nLIMIT $n").getOrElse("")
+        s"\nSELECT ${outItems.mkString(", ")}\nFROM $OffsetCte a\n$joins" +
+        orderLimitSql(req, keyNames)
     }
 
     if (filterGroups.size > 1) {
@@ -701,8 +517,7 @@ final class MetricPlanner(val registry: SemanticRegistry) {
       return s"WITH ${ctes.mkString(",\n")}" +
         desc("one aggregate per metric-filter group") +
         s"\nSELECT ${outItems.mkString(", ")}\nFROM f0\n$joins" +
-        (if (orderExprs.nonEmpty) s"\nORDER BY ${orderExprs.mkString(", ")}" else "") +
-        req.limit.map(n => s"\nLIMIT $n").getOrElse("")
+        orderLimitSql(req, keyNames)
     }
 
     val whereParts = baseWhere ++ filterGroups.head._1
@@ -714,9 +529,7 @@ final class MetricPlanner(val registry: SemanticRegistry) {
       sb ++= s"\nWHERE ${whereParts.mkString(" AND ")}" + desc("where + time constraints (M4/M5)")
     if (groupExprs.nonEmpty)
       sb ++= s"\nGROUP BY ${groupExprs.mkString(", ")}" + desc("dimensions (M2)")
-    if (orderExprs.nonEmpty)
-      sb ++= s"\nORDER BY ${orderExprs.mkString(", ")}" + desc("order (M6)")
-    req.limit.foreach(n => sb ++= s"\nLIMIT $n" + desc("limit (M7)"))
+    sb ++= orderLimitSql(req, keyNames, desc("order (M6)"), desc("limit (M7)"))
     sb.result()
   }
 
@@ -724,7 +537,7 @@ final class MetricPlanner(val registry: SemanticRegistry) {
     * without executing (parity with dbt_query.py:91-133). */
   def explain(spark: SparkSession, dir: String, req: MetricQueryRequest): ExplainResult = {
     val c = compile(spark, dir, req)
-    ExplainResult(c.sql, c.sqlWithDescriptions,
+    ExplainResult(c.sql, renderSql(req, withDescriptions = true),
       c.df.queryExecution.optimizedPlan.treeString,
       PlanDot.toDot(c.df))
   }

@@ -12,6 +12,26 @@ class PlannerSpec extends AnyFunSuite {
   private val dir = TestSpark.sfDir
   private val planner = new MetricPlanner(DefaultRegistry.registry)
 
+  /** Two DISTINCT conversion funnels with disjoint-ish base slices, so
+    * some grain keys exist in only one funnel's base aggregate. */
+  private lazy val multiFunnel = {
+    val reg = DefaultRegistry.registry
+    new MetricPlanner(new SemanticRegistry(
+      models = reg.models, links = reg.links, metrics = reg.metrics,
+      conversionMetrics = Seq(
+        ConversionMetric("conv_a", "events", "user_id", "ts",
+          "event_type = 'view' AND pmod(user_id, 7) = 0",
+          "event_type = 'purchase'", windowDays = 1, calculation = "conversions"),
+        ConversionMetric("conv_b", "events", "user_id", "ts",
+          "event_type = 'view' AND pmod(user_id, 7) = 3",
+          "event_type = 'purchase'", windowDays = 1, calculation = "conversions"),
+        ConversionMetric("rate_b", "events", "user_id", "ts",
+          "event_type = 'view' AND pmod(user_id, 7) = 3",
+          "event_type = 'purchase'", windowDays = 1, calculation = "conversion_rate"))))
+  }
+  private val multiFunnelReq = MetricQueryRequest(
+    metrics = Seq("conv_a", "conv_b", "rate_b"), groupBy = Seq("metric_time__day"))
+
   test("registry rejects duplicate dimension names across models") {
     val ex = intercept[IllegalArgumentException] {
       new SemanticRegistry(
@@ -36,7 +56,7 @@ class PlannerSpec extends AnyFunSuite {
 
   test("rendered SQL executes in Spark and matches the DataFrame result") {
     Tables.registerAll(spark, dir)
-    for (req <- Seq(
+    val shapes = Seq(
       MetricQueryRequest(metrics = Seq("revenue"), savedQuery = Some("revenue_by_month")),
       MetricQueryRequest(metrics = Seq("revenue", "order_count"),
         groupBy = Seq("r_name", "n_name"), orderBy = Seq("-revenue")),
@@ -46,11 +66,81 @@ class PlannerSpec extends AnyFunSuite {
       MetricQueryRequest(metrics = Seq("avg_order_value"),
         groupBy = Seq("o_orderpriority")),
       MetricQueryRequest(metrics = Seq("avg_order_value", "revenue"),
-        groupBy = Seq("l_returnflag")))) {
-      val c = planner.compile(spark, dir, req)
+        groupBy = Seq("l_returnflag")),
+      // offset (bound to its checkpointed aggregate), ordered by a base metric
+      MetricQueryRequest(metrics = Seq("revenue", "revenue_mom_growth"),
+        groupBy = Seq("metric_time__month"),
+        startTime = Some("1995-01-01"), endTime = Some("1996-06-01"),
+        orderBy = Seq("-revenue"), limit = Some(10)),
+      // cross-model metric_time join, with a derived metric
+      MetricQueryRequest(metrics = Seq("revenue", "event_value", "avg_order_value"),
+        groupBy = Seq("metric_time__quarter"), startTime = Some("1995-01-01")),
+      // percentile measures
+      MetricQueryRequest(metrics = Seq("median_event_value", "p90_event_value"),
+        groupBy = Seq("event_type")),
+      // one aggregate per metric-filter group, outer-joined
+      MetricQueryRequest(metrics = Seq("revenue", "returned_revenue", "urgent_revenue"),
+        groupBy = Seq("c_mktsegment"), orderBy = Seq("-revenue")),
+      // sub-day grain
+      MetricQueryRequest(metrics = Seq("event_value"), groupBy = Seq("metric_time__hour"),
+        startTime = Some("2024-01-02"), endTime = Some("2024-01-03"))
+    ).map(planner -> _) :+ (multiFunnel -> multiFunnelReq)
+    for ((p, req) <- shapes) {
+      val c = p.compile(spark, dir, req)
       val viaSql = spark.sql(c.sql).collect().map(_.toString)
       val viaDf = c.df.collect().map(_.toString)
       assert(viaSql.sameElements(viaDf), s"sql/df mismatch for $req")
+    }
+  }
+
+  test("compile binds model tables to its dir, never to session views of the same names") {
+    import org.apache.spark.sql.GraftSqlBridge
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    val reqs = Seq(
+      MetricQueryRequest(metrics = Seq("revenue"), groupBy = Seq("r_name", "n_name"),
+        where = Some("l_suppkey IN (SELECT s_suppkey FROM supplier WHERE pmod(s_suppkey, 2) = 0)")),
+      MetricQueryRequest(metrics = Seq("revenue", "revenue_mom_growth"),
+        groupBy = Seq("metric_time__month", "r_name"),
+        startTime = Some("1995-01-01"), endTime = Some("1995-12-31")),
+      MetricQueryRequest(metrics = Seq("revenue", "event_value"),
+        groupBy = Seq("metric_time__month")),
+      MetricQueryRequest(metrics = Seq("view_to_purchase_count", "view_to_purchase_rate"),
+        groupBy = Seq("metric_time__day")))
+    val expected = reqs.map(r => planner.compile(spark, dir, r).df.collect().toSeq)
+    // views of every model table over a 20-row copy in another directory
+    val other = java.nio.file.Files.createTempDirectory("graft-other-fixture").toString
+    val models = DefaultRegistry.registry.models.map(_.table)
+    val before = spark.catalog.listTables().collect().map(t => (t.name, t.isTemporary)).toSet
+    try {
+      for (t <- models) {
+        Tables.load(spark, dir, t).limit(20).write.parquet(s"$other/$t.parquet")
+        Tables.load(spark, other, t).createOrReplaceTempView(t)
+      }
+      val views = spark.catalog.listTables().collect().map(t => (t.name, t.isTemporary)).toSet
+      def file(uri: String) = new java.io.File(new java.net.URI(uri)).getCanonicalFile
+      val root = new java.io.File(dir).getCanonicalPath + java.io.File.separator
+      for ((req, want) <- reqs.zip(expected)) {
+        val c = planner.compile(spark, dir, req)
+        // CTE bodies and subqueries bind too: no file outside dir, and
+        // the answer (the offset's checkpointed body included) is dir's
+        val outside = c.df.inputFiles.filterNot(file(_).getPath.startsWith(root))
+        assert(outside.isEmpty, s"$req read ${outside.mkString(", ")}")
+        assert(c.df.collect().toSeq == want, s"$req answered from the views")
+      }
+      assert(spark.catalog.listTables().collect().map(t => (t.name, t.isTemporary)).toSet == views,
+        "compile must leave the session catalog as it found it")
+      // small dimensions carry a broadcast hint in the bound plan
+      val hinted = planner.compile(spark, dir, reqs.head).df.queryExecution.analyzed.collect {
+        case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) =>
+          GraftSqlBridge.ofRows(spark, h.child).inputFiles.toSeq
+      }.flatten.map(file(_).getName)
+      assert(hinted.toSet == Set("nation.parquet", "region.parquet"), hinted)
+    } finally {
+      for (t <- models) {
+        if (before((t, true))) Tables.load(spark, dir, t).createOrReplaceTempView(t)
+        else spark.catalog.dropTempView(t)
+      }
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(other))
     }
   }
 
@@ -80,6 +170,13 @@ class PlannerSpec extends AnyFunSuite {
     intercept[RuntimeException] {
       planner.compile(spark, dir,
         MetricQueryRequest(metrics = Seq("revenue"), groupBy = Seq("nope")))
+    }
+    // no metric: the renderer's own check, for compile and every render
+    for (run <- Seq[() => Any](
+        () => planner.renderSql(MetricQueryRequest(Nil), withDescriptions = false),
+        () => planner.compile(spark, dir, MetricQueryRequest(Nil)))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("at least one metric required"), e.getMessage)
     }
   }
 
@@ -388,25 +485,9 @@ class PlannerSpec extends AnyFunSuite {
   test("multi-funnel conversion: DataFrame and rendered SQL agree when funnels cover different keys") {
     // Two DISTINCT funnels with disjoint-ish base slices so some grain
     // keys exist in only one funnel's base aggregate — the case where
-    // a naive SELECT b0.key after FULL OUTER JOIN diverges from the
-    // DataFrame's USING-join key coalescing.
-    val reg = DefaultRegistry.registry
-    val custom = new SemanticRegistry(
-      models = reg.models, links = reg.links, metrics = reg.metrics,
-      conversionMetrics = Seq(
-        ConversionMetric("conv_a", "events", "user_id", "ts",
-          "event_type = 'view' AND pmod(user_id, 7) = 0",
-          "event_type = 'purchase'", windowDays = 1, calculation = "conversions"),
-        ConversionMetric("conv_b", "events", "user_id", "ts",
-          "event_type = 'view' AND pmod(user_id, 7) = 3",
-          "event_type = 'purchase'", windowDays = 1, calculation = "conversions"),
-        ConversionMetric("rate_b", "events", "user_id", "ts",
-          "event_type = 'view' AND pmod(user_id, 7) = 3",
-          "event_type = 'purchase'", windowDays = 1, calculation = "conversion_rate")))
-    val p = new MetricPlanner(custom)
-    val c = p.compile(spark, dir, MetricQueryRequest(
-      metrics = Seq("conv_a", "conv_b", "rate_b"),
-      groupBy = Seq("metric_time__day")))
+    // a naive SELECT b0.key after FULL OUTER JOIN diverges from a
+    // USING join's key coalescing.
+    val c = multiFunnel.compile(spark, dir, multiFunnelReq)
     Tables.registerAll(spark, dir)
     val viaDf = c.df.collect().map(_.toString).sorted
     val viaSql = spark.sql(c.sql).collect().map(_.toString).sorted
