@@ -45,15 +45,11 @@ object Upsert {
   /** insert_overwrite: replace exactly the partitions (`partCol`
     * values) present in the delta; untouched partition directories are
     * not rewritten. The table must be hive-partitioned on `partCol`
-    * (as written by a previous call or `df.write.partitionBy`). */
+    * (as written by a previous call or `df.write.partitionBy`). The
+    * dynamic mode is a writer option, so the session conf is never
+    * touched. */
   def insertOverwrite(spark: SparkSession, path: String, delta: DataFrame,
-      partCol: String): Unit = {
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try delta.write.mode("overwrite").partitionBy(partCol).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+      partCol: String): Unit =
+    delta.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(path)
 }

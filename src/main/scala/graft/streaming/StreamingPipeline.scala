@@ -670,7 +670,7 @@ object StreamingPipeline {
       corpusDir: String, sigDir: String, sortKeyDir: String,
       fpDir: String, pairsDir: String, threshold: Double,
       snWindow: Int, maxHamming: Int, shardId: Long): Unit = {
-    import graft.llm.{Dedup, TextAnalysis}
+    import graft.llm.Dedup
     val spark = cleaned0.sparkSession
     // the sig store is the commit record for ALL FOUR stores: only
     // epoch ids whose sig partition committed are read from the
@@ -693,22 +693,10 @@ object StreamingPipeline {
       "left_anti")
     // ONE digest pass per epoch computes all three fingerprint
     // families (the q292 shared-prep shape on the streaming delta)
-    val par = spark.sparkContext.defaultParallelism
-    val toks = TextAnalysis.tokens(col("clean_text"))
-    val prep = cleaned.repartition(par).select(col("doc_id").as("id"),
-        graft.functions.MinHashShingles
-          .column(col("clean_text"), 12).as("ms"),
-        graft.functions.SimHash1660.column(toks).as("sh"))
-      .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("shs"),
-        col("sh.sh16").as("sh16"), col("sh.sh60").as("sh60"))
+    val prep = Dedup.fingerprintPrep(cleaned, "doc_id", "clean_text")
       .persist()
     try {
-      val newSigs = prep.select(col("id"), col("sig"),
-          col("shs").as("sh"))
-        .withColumn("bh", Dedup.bandHashesLong(col("sig"), 4, 3))
-      val newSk = prep.select(col("id"), col("shs"),
-        col("sh16").as("sh"))
-      val newFps = prep.select(col("id"), col("sh60").as("sh"))
+      val (newSigs, newSk, newFps) = Dedup.prepArtifacts(prep)
       // eager, cache-released pair probe (the q292 call)
       val pairs = Dedup.incrementalBlockedDedupPairsFromArtifacts(
         newSigs, newSk, newFps, existingSigs, existingSk, existingFps,

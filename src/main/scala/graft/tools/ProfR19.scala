@@ -72,17 +72,10 @@ object ProfR19 {
     if (what == "q256" || what == "dedup") {
       import graft.llm.Dedup
       val docs = t("documents")
-      val par = spark.sparkContext.defaultParallelism
-      val toks = graft.llm.TextAnalysis.tokens(col("text"))
-      val prep = docs.repartition(par).select(col("doc_id").as("id"),
-          graft.functions.MinHashShingles.column(col("text"), 12).as("ms"),
-          graft.functions.SimHash1660.column(toks).as("sh"))
-        .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("shs"),
-          col("sh.sh16").as("sh16"), col("sh.sh60").as("sh60"))
-        .persist()
+      val prep = Dedup.fingerprintPrep(docs, "doc_id", "text").persist()
       time("q256.prep-materialize") { prep.count() }
-      // the three public blockers (the replicas inside
-      // blockedPairsWithCaches are verbatim copies of these)
+      // the three public blockers (blockedPairsWithCaches runs the
+      // same constructions over the shared prep)
       time("q256.lshPairs") {
         exec(Dedup.lshPairs(docs, "doc_id", "text", 0.5)) }
       time("q256.sortedNeighborPairs") {
@@ -116,19 +109,9 @@ object ProfR19 {
       def cl = spark.read.parquet(s"$idx/clusters")
       time("q292.artifact-read-counts") {
         (sig.count(), sk.count(), fp.count(), pl.count(), cl.count()) }
-      val par = spark.sparkContext.defaultParallelism
-      val toks = graft.llm.TextAnalysis.tokens(col("text"))
-      val prep = batch.repartition(par).select(col("doc_id").as("id"),
-          graft.functions.MinHashShingles.column(col("text"), 12).as("ms"),
-          graft.functions.SimHash1660.column(toks).as("sh"))
-        .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("shs"),
-          col("sh.sh16").as("sh16"), col("sh.sh60").as("sh60"))
-        .persist()
+      val prep = Dedup.fingerprintPrep(batch, "doc_id", "text").persist()
       time("q292.batch-prep") { prep.count() }
-      val newSigs = prep.select(col("id"), col("sig"), col("shs").as("sh"))
-        .withColumn("bh", Dedup.bandHashesLong(col("sig"), 4, 3))
-      val newSk = prep.select(col("id"), col("shs"), col("sh16").as("sh"))
-      val newFps = prep.select(col("id"), col("sh60").as("sh"))
+      val (newSigs, newSk, newFps) = Dedup.prepArtifacts(prep)
       time("q292.incr-lsh") {
         exec(Dedup.incrementalLshPairs(newSigs, sig, 0.5, 4, 6,
           materialize = true)) }
@@ -155,30 +138,8 @@ object ProfR19 {
     if (what == "q262") {
       import graft.llm.Dedup
       val docs = t("documents")
-      val base = docs.repartition(32).select(col("doc_id").as("id"),
-          graft.functions.MinHashShingles
-            .column(col("text"), 12).as("ms"))
-        .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("sh"))
-        .withColumn("bh", Dedup.bandHashesLong(col("sig"), 4, 3))
-        .persist()
+      val base = Dedup.signatureTable(docs, "doc_id", "text").persist()
       time("q262.base") { base.count() }
-      val bands = base.select(col("id"),
-        posexplode(col("bh")).as(Seq("band_idx", "band_hash")))
-      val pairs = bands.as("x").join(bands.as("y"),
-          col("x.band_idx") === col("y.band_idx") &&
-            col("x.band_hash") === col("y.band_hash") &&
-            col("x.id") < col("y.id"))
-        .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-        .distinct()
-      time("q262.cands") { println("  n_cand=" + pairs.count()) }
-      val withSides = pairs
-        .join(base.select(col("id").as("id_a"), col("sig").as("__sa"),
-          col("sh").as("__ha")), Seq("id_a"))
-        .join(base.select(col("id").as("id_b"), col("sig").as("__sb"),
-          col("sh").as("__hb")), Seq("id_b"))
-      time("q262.verify(jaccard+agree)") {
-        exec(withSides.select(col("id_a"), col("id_b"),
-          Dedup.jaccard(col("__ha"), col("__hb")).as("j"))) }
       base.unpersist(blocking = false)
       val lazyPlan = Dedup.bbitJaccardEst(docs, "doc_id", "text",
         materialize = false)

@@ -3170,9 +3170,46 @@ class LlmSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want,
       s"cluster map mismatch: got ${got.size} rows, want ${want.size}")
+    // the composed pair set is exactly the three public blockers' union
+    val composed = Dedup.blockedDedupPairs(docs, "doc_id", "text")
+      .select("id_a", "id_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(composed == union,
+      s"composed pairs (${composed.size}) must equal lsh ∪ sn ∪ sim (${union.size})")
     // and the union genuinely adds over LSH alone on this fixture —
     // otherwise the composition gate would be vacuous
     assert(union.size > lsh.length || sn.nonEmpty || sim.nonEmpty)
+  }
+
+  test("blocker entry points: the only persisted RDD a call adds is its own result") {
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet.toSet
+    def pinned(df: org.apache.spark.sql.DataFrame) = df.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+    val before = persisted
+    val keepers = Dedup.blockedClusterKeepers(docs, "doc_id", "text", "n_chars")
+    assert(keepers.count() == docs.count())
+    // the keeper frame is lazy over the eager clusters: nothing pinned
+    assert(persisted -- before == Set.empty, "blockedClusterKeepers")
+    for ((name, call) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "blockedDedupPairs" -> (() => Dedup.blockedDedupPairs(docs, "doc_id", "text")),
+        "incrementalBlockedDedupPairs" -> { () =>
+          val existing = docs.filter(col("doc_id") % 4 =!= 0)
+          Dedup.incrementalBlockedDedupPairs(
+            Dedup.signatureTable(existing, "doc_id", "text"),
+            Dedup.sortKeyTable(existing, "doc_id", "text"),
+            Dedup.simhashTable(existing, "doc_id", "text"),
+            docs.filter(col("doc_id") % 4 === 0), "doc_id", "text")
+        })) {
+      val before = persisted
+      val result = call()
+      val added = persisted -- before
+      assert(added.size == 1 && added == pinned(result),
+        s"$name left $added, its result pins ${pinned(result)}")
+      assert(result.count() > 0, s"$name found no pairs")
+      added.foreach(id => sc.getPersistentRDDs(id).unpersist(false))
+    }
   }
 
   test("bbitJaccardEst: identical docs estimate exactly 1, estimate tracks exact jaccard on candidates") {

@@ -61,7 +61,7 @@ class PlannerSpec extends AnyFunSuite {
       MetricQueryRequest(metrics = Seq("revenue", "order_count"),
         groupBy = Seq("r_name", "n_name"), orderBy = Seq("-revenue")),
       MetricQueryRequest(metrics = Seq("total_qty"), groupBy = Seq("p_brand"),
-        where = Some("p_type LIKE '%BRASS%'")),
+        where = Some("p_type LIKE '%ECONOMY%'")),
       // derived ratio metric, alone and next to a base input
       MetricQueryRequest(metrics = Seq("avg_order_value"),
         groupBy = Seq("o_orderpriority")),
@@ -90,6 +90,7 @@ class PlannerSpec extends AnyFunSuite {
       val viaSql = spark.sql(c.sql).collect().map(_.toString)
       val viaDf = c.df.collect().map(_.toString)
       assert(viaSql.sameElements(viaDf), s"sql/df mismatch for $req")
+      assert(viaDf.nonEmpty, s"empty result compares nothing for $req")
     }
   }
 

@@ -48,6 +48,7 @@ class UpsertSpec extends AnyFunSuite {
         .map(f => f.getName -> f.lastModified()).toMap
     }
     val before1 = files("2024-01-01"); val before3 = files("2024-01-03")
+    val modeBefore = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     // delta touches only day=2024-01-02
     Upsert.insertOverwrite(spark,  path,
       Seq((2L, "Y2", "2024-01-02"), (9L, "new", "2024-01-02"))
@@ -62,9 +63,7 @@ class UpsertSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
     assert(got == Seq((1L, "x", "2024-01-01"), (2L, "Y2", "2024-01-02"),
       (3L, "z", "2024-01-03"), (9L, "new", "2024-01-02")))
-    // overwrite-mode conf restored
-    assert(!spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      .contains("dynamic") ||
-      spark.conf.get("spark.sql.sources.partitionOverwriteMode") != "dynamic")
+    // the session's overwrite-mode conf is left as it was
+    assert(spark.conf.getOption("spark.sql.sources.partitionOverwriteMode") == modeBefore)
   }
 }
