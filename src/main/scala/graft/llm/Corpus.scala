@@ -429,8 +429,7 @@ object Corpus {
     * even on adversarial chain-shaped graphs — where plain min-label
     * propagation needs O(diameter) rounds. */
   def dupClusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-      localMaxBytes: Long = 16L << 20,
-      checkpointDir: Option[String] = None): DataFrame = {
+      localMaxBytes: Long = 16L << 20): DataFrame = {
     // Small-graph fast path: near-dup edge lists are pair-verified
     // output, so at 100 TB they are orders of magnitude smaller than
     // the corpus; most fit the driver comfortably.
@@ -473,7 +472,7 @@ object Corpus {
       import spark.implicits._
       return parent.keys.toSeq.map(id => (id, find(id))).toDF("id", "cluster_id")
     }
-    bigStarClusters(pairRows.toDF("id_a", "id_b"), checkpointDir = checkpointDir)._1
+    bigStarClusters(pairRows.toDF("id_a", "id_b"))._1
     } finally pairRows.unpersist(blocking = false)
   }
 
@@ -490,8 +489,8 @@ object Corpus {
     * Convergence = the canonical edge set stops changing (exact
     * set-difference check, not a checksum: a false early stop would
     * silently merge/split clusters). */
-  def bigStarClusters(pairs: DataFrame, maxRounds: Int = 64,
-      checkpointDir: Option[String] = None): (DataFrame, Int) = {
+  def bigStarClusters(pairs: DataFrame,
+      maxRounds: Int = 64): (DataFrame, Int) = {
     def canon(e: DataFrame): DataFrame = e
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
@@ -516,52 +515,32 @@ object Corpus {
     // Per-round lineage TRUNCATION is mandatory for iterative
     // algorithms — persist() keeps the logical plan, which doubles
     // every round and OOMs the driver after ~15 rounds long before the
-    // data is large. Two truncation modes:
-    //  - default: localCheckpoint(eager) — zero-setup, blocks live in
-    //    executor storage. Right for local mode and short jobs, but on
-    //    a real cluster an EXECUTOR LOSS destroys the truncated RDD
-    //    (no lineage left to recompute it) and kills a 60-round job.
-    //  - checkpointDir=Some(dir): reliable checkpoint() — each round's
-    //    edge set is written to the (typically HDFS/object-store) dir,
-    //    so any executor can re-read it after a loss; the round
-    //    structure is identical, the cost is one distributed write per
-    //    round. This is the mode to run with 1000 executors.
-    // The checkpoint-dir change is SCOPED (set → iterate → restore,
-    // Lineage.withCheckpointDir): every round's checkpoint is eager,
-    // so nothing escapes the scope, and the session's own global
-    // checkpoint setting is untouched after the call.
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(true)
-    def run(): (DataFrame, Int) = {
-      var edges = truncate(canon(
-        pairs.select(col("id_a").cast("long").as("u"),
-          col("id_b").cast("long").as("v"))))
-      var rounds = 0
-      var done = false
-      while (!done && rounds < maxRounds) {
-        val next = truncate(canon(smallStar(canon(largeStar(edges)))))
-        rounds += 1
-        // exact set equality in ONE action (r19; was two exceptAll
-        // actions per round): both frames are canonical DISTINCT edge
-        // sets, so the symmetric difference is empty iff they are
-        // equal — same exactness, half the per-round job barriers
-        done = next.exceptAll(edges)
-          .unionAll(edges.exceptAll(next)).isEmpty
-        edges = next
-      }
-      // converged edges are stars (u → component min): label members
-      // by their root, roots by themselves
-      val labels = edges.select(col("u").as("id"), col("v").as("label"))
-        .unionAll(edges.select(col("v").as("id"), col("v").as("label")))
-        .groupBy("id").agg(min(col("label")).as("cluster_id"))
-      (labels, rounds)
+    // data is large. Lineage.pin truncates: with a context checkpoint
+    // dir each round's edge set is a reliable file any executor can
+    // re-read after a loss (the mode to run with 1000 executors),
+    // without one it is an executor-local block.
+    var edges = Lineage.pin(canon(
+      pairs.select(col("id_a").cast("long").as("u"),
+        col("id_b").cast("long").as("v"))))
+    var rounds = 0
+    var done = false
+    while (!done && rounds < maxRounds) {
+      val next = Lineage.pin(canon(smallStar(canon(largeStar(edges)))))
+      rounds += 1
+      // exact set equality in ONE action (r19; was two exceptAll
+      // actions per round): both frames are canonical DISTINCT edge
+      // sets, so the symmetric difference is empty iff they are
+      // equal — same exactness, half the per-round job barriers
+      done = next.exceptAll(edges)
+        .unionAll(edges.exceptAll(next)).isEmpty
+      edges = next
     }
-    checkpointDir match {
-      case Some(dir) =>
-        Lineage.withCheckpointDir(pairs.sparkSession.sparkContext, dir)(run())
-      case None => run()
-    }
+    // converged edges are stars (u → component min): label members
+    // by their root, roots by themselves
+    val labels = edges.select(col("u").as("id"), col("v").as("label"))
+      .unionAll(edges.select(col("v").as("id"), col("v").as("label")))
+      .groupBy("id").agg(min(col("label")).as("cluster_id"))
+    (labels, rounds)
   }
 
   /** Padding-waste accounting for batch composition — the number

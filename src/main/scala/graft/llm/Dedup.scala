@@ -131,18 +131,8 @@ object Dedup {
     * (the ONLY shuffle) → distinct candidate pairs → verify with exact
     * Jaccard ≥ threshold.
     *
-    * ==Cache-release contract==
-    * The default (`materialize = false`) return is a LAZY plan pinned
-    * on two persisted intermediates (the signature table and the
-    * scored-pair CSE barrier). Those blocks stay cached until LRU
-    * eviction — fine for run-and-exit jobs, a slow leak in a
-    * long-lived session that calls this repeatedly. Long-lived callers
-    * must pick one of:
-    *   - `materialize = true` (plus `checkpointDir` on a real
-    *     cluster): pairs are computed eagerly and every intermediate
-    *     cache is released before return; or
-    *   - [[withLshPairs]]: loan-pattern wrapper that consumes the lazy
-    *     frame and releases the caches afterward.
+    * Returns the pairs pinned by [[Lineage.pin]] with every
+    * intermediate cache released; [[withLshPairs]] is the lazy loan.
     *
     * ==Band/row choice==
     * With r rows per band and b bands the candidate S-curve midpoint
@@ -154,19 +144,15 @@ object Dedup {
     * makes this hold at 1000× the data. */
   def lshPairs(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5, numHashes: Int = 12, numBands: Int = 4,
-      minAgree: Int = 6, materialize: Boolean = false,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val (verified, caches) = lshPairsWithCaches(docs, idCol, textCol,
-      threshold, numHashes, numBands, minAgree)
-    if (!materialize) verified
-    else materializeAndRelease(verified, checkpointDir, caches)
-  }
+      minAgree: Int = 6): DataFrame =
+    pinReleasing(lshPairsWithCaches(docs, idCol, textCol, threshold,
+      numHashes, numBands, minAgree))
 
   /** Loan-pattern [[lshPairs]] for long-lived sessions: computes the
     * lazy verified-pair frame, hands it to `f`, and releases every
     * intermediate cache once `f` returns — the no-leak way to consume
-    * pairs without paying `materialize = true`'s extra
-    * materialization. Letting the frame escape `f` is a PERFORMANCE
+    * pairs without paying the pinned form's extra materialization.
+    * Letting the frame escape `f` is a PERFORMANCE
     * hazard, not a correctness one: after unpersist Spark simply
     * recomputes the lineage, but the CSE barrier is gone, so jaccard
     * and the minhash signatures are re-evaluated from scratch on
@@ -185,28 +171,12 @@ object Dedup {
     * embed [[setSimJoinPairs]] more than once. */
   private val obsSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Pin a loan result: reliable checkpoint when a dir is given (the
-    * right call on a real cluster — localCheckpoint blocks die with
-    * their executor), executor-local otherwise (right for local
-    * mode). The [[materializeAndRelease]] rule, reused by every
-    * materialize-inside-the-loan consumer. */
-  private def pin(df: DataFrame, checkpointDir: Option[String]): DataFrame =
-    checkpointDir match {
-      case Some(dir) => Lineage.withCheckpointDir(
-        df.sparkSession.sparkContext, dir)(df.checkpoint(eager = true))
-      case None => df.localCheckpoint(true)
-    }
-
-  /** Release the blocks [[pin]] or [[materializeAndRelease]] pinned for
-    * an intermediate result that nothing reads any more: every
-    * local-checkpoint RDD under `df` (a reliable checkpoint holds
-    * none). */
-  private def unpin(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
+  /** Every public pair function: pin a builder's lazy plan
+    * ([[Lineage.pin]]) and release the caches it read, so the result
+    * is the one persisted RDD the call adds. */
+  private def pinReleasing(built: (DataFrame, Seq[DataFrame])): DataFrame =
+    try Lineage.pin(built._1)
+    finally built._2.foreach(_.unpersist(blocking = false))
 
   /** Canonical-keeper resolution — the dedup pipeline's LAST MILE:
     * near-dup pairs → connected-component clusters → ONE survivor per
@@ -223,7 +193,7 @@ object Dedup {
     * the corpus — and singletons rejoin as their own keeper through
     * the left join's coalesce, shuffling only (id, score) pairs. */
   def clusterKeepers(docs: DataFrame, idCol: String, textCol: String,
-      scoreCol: String, checkpointDir: Option[String] = None): DataFrame =
+      scoreCol: String): DataFrame =
     withLshPairs(docs, idCol, textCol) { pairs =>
       val clusters = graft.llm.Corpus.dupClusters(pairs)
         .withColumnRenamed("id", idCol)
@@ -237,15 +207,14 @@ object Dedup {
       // the signature/CSE-barrier caches already unpersisted, and
       // every later action re-runs the whole minhash/band/jaccard
       // chain — the exact hazard withLshPairs's doc warns against.
-      // localCheckpoint pins the narrow (id, cluster, score, kept)
+      // Lineage.pin pins the narrow (id, cluster, score, kept)
       // rows — corpus-cardinality but a few dozen bytes each — so the
       // LSH lineage is cut for good; values are written verbatim.
-      pin(base.join(keepers, Seq("cluster_id"), "left")
+      Lineage.pin(base.join(keepers, Seq("cluster_id"), "left")
         .select(col(idCol),
           coalesce(col("cluster_id"), col(idCol)).as("cluster_id"),
           col(scoreCol),
-          coalesce(col(idCol) === col("__keeper"), lit(true)).as("kept")),
-        checkpointDir)
+          coalesce(col(idCol) === col("__keeper"), lit(true)).as("kept")))
     }
 
   /** Near-dup pair count as a function of the jaccard threshold —
@@ -263,8 +232,7 @@ object Dedup {
     * LSH pass per point. The |thresholds|-row result materializes
     * inside the loan (clusterKeepers discipline). */
   def thresholdCurve(docs: DataFrame, idCol: String, textCol: String,
-      thresholds: Seq[Double] = Seq(0.5, 0.6, 0.7, 0.8, 0.9),
-      checkpointDir: Option[String] = None): DataFrame = {
+      thresholds: Seq[Double] = Seq(0.5, 0.6, 0.7, 0.8, 0.9)): DataFrame = {
     require(thresholds.nonEmpty && thresholds.forall(_ >= 0.5),
       s"thresholds must be >= the 0.5 LSH verify floor, got $thresholds")
     withLshPairs(docs, idCol, textCol) { pairs =>
@@ -274,9 +242,9 @@ object Dedup {
       val counts = pairs.crossJoin(broadcast(th))
         .filter(col("jaccard") >= col("threshold"))
         .groupBy("threshold").agg(count(lit(1)).cast("long").as("n_pairs"))
-      pin(th.join(counts, Seq("threshold"), "left")
+      Lineage.pin(th.join(counts, Seq("threshold"), "left")
         .select(col("threshold"),
-          coalesce(col("n_pairs"), lit(0L)).as("n_pairs")), checkpointDir)
+          coalesce(col("n_pairs"), lit(0L)).as("n_pairs")))
     }
   }
 
@@ -296,7 +264,7 @@ object Dedup {
     * division) so it hashes cross-engine. Result materializes inside
     * the loan (clusterKeepers discipline). */
   def dupFlowMatrix(docs: DataFrame, idCol: String, textCol: String,
-      srcCol: String, checkpointDir: Option[String] = None): DataFrame =
+      srcCol: String): DataFrame =
     withLshPairs(docs, idCol, textCol) { pairs =>
       val dec = org.apache.spark.sql.types.DecimalType(30, 12)
       val src = docs.select(col(idCol), col(srcCol))
@@ -305,12 +273,12 @@ object Dedup {
           Seq("id_a"))
         .join(src.select(col(idCol).as("id_b"), col(srcCol).as("__sb")),
           Seq("id_b"))
-      pin(tagged
+      Lineage.pin(tagged
         .groupBy(least(col("__sa"), col("__sb")).as("source_a"),
           greatest(col("__sa"), col("__sb")).as("source_b"))
         .agg(count(lit(1)).as("n_pairs"),
           (sum(col("jaccard").cast(dec)).cast("double") /
-            count(lit(1)).cast("double")).as("mean_jaccard")), checkpointDir)
+            count(lit(1)).cast("double")).as("mean_jaccard")))
     }
 
   /** Near-subset (containment) pairs over the SAME LSH candidate
@@ -329,12 +297,16 @@ object Dedup {
     * `contained_id` (ties → lower id, consistent with the oracle's
     * `len(a) <= len(b)` rule).
     *
-    * Same cache contract as [[lshPairs]]: default return is lazy on
-    * pinned intermediates; `materialize = true` releases them. */
+    * Pinned like [[lshPairs]], intermediates released. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, numHashes: Int = 12, numBands: Int = 4,
-      minAgree: Int = 6, materialize: Boolean = false,
-      checkpointDir: Option[String] = None): DataFrame = {
+      minAgree: Int = 6): DataFrame =
+    pinReleasing(containmentPairsWithCaches(docs, idCol, textCol,
+      threshold, numHashes, numBands, minAgree))
+
+  private[graft] def containmentPairsWithCaches(docs: DataFrame,
+      idCol: String, textCol: String, threshold: Double, numHashes: Int,
+      numBands: Int, minAgree: Int): (DataFrame, Seq[DataFrame]) = {
     val (cand, base, base0) = lshCandidatesWithCaches(docs, idCol, textCol,
       numHashes, numBands, minAgree)
     val sa = size(col("sh_a"))
@@ -351,9 +323,7 @@ object Dedup {
         when(sa <= sb, col("id_b")).otherwise(col("id_a")).as("container_id"),
         (inter.cast("double") / least(sa, sb)).as("containment"))
       .persist()
-    val out = sc.filter(col("containment") >= threshold)
-    if (!materialize) out
-    else materializeAndRelease(out, checkpointDir, Seq(sc, base0))
+    (sc.filter(col("containment") >= threshold), Seq(sc, base0))
   }
 
   /** Shared LSH candidate generation: returns (candidate (id_a,id_b)
@@ -384,11 +354,7 @@ object Dedup {
     // the raw struct is the CSE barrier guaranteeing the expression
     // runs once even though two fields are projected from it; the
     // cache is also read three times (band join ×2, verify joins).
-    // Default (lazy) callers leave it pinned until LRU eviction —
-    // pass materialize=true in a long-lived session to compute the
-    // verified pairs eagerly and release every intermediate cache
-    // (checkpointDir ⇒ reliable checkpoint instead of executor-local
-    // blocks, the right mode on a real cluster).
+    // The caller releases it (it is among the returned caches).
     val par = docs.sparkSession.sparkContext.defaultParallelism
     val base0 = docs.repartition(par).select(col(idCol).as("id"),
       graft.functions.MinHashShingles
@@ -465,7 +431,7 @@ object Dedup {
       .select("id_a", "id_b")
   }
 
-  private def lshPairsWithCaches(docs: DataFrame, idCol: String,
+  private[graft] def lshPairsWithCaches(docs: DataFrame, idCol: String,
       textCol: String, threshold: Double, numHashes: Int, numBands: Int,
       minAgree: Int): (DataFrame, Seq[DataFrame]) = {
     val (prefiltered, base, base0) = lshCandidatesWithCaches(docs, idCol,
@@ -473,10 +439,10 @@ object Dedup {
     // persist() barrier: without it Catalyst collapses the projection
     // into the filter and evaluates the jaccard expression twice per
     // pair (once for the predicate, once for the output column). The
-    // return is LAZY — an eager checkpoint here measured 2–5× on
-    // every consumer (one extra materialization per call) and hides
-    // the band join from downstream optimization; lazy also stays
-    // recomputable after executor loss.
+    // return is LAZY for the loan consumers ([[withLshPairs]]): an
+    // eager pin here measured 2–5× on every one of them (one extra
+    // materialization per call) and hides the band join from their
+    // downstream optimization.
     val sc = scored(prefiltered, base).persist()
     val verified = sc.filter(col("jaccard") >= threshold)
     (verified, Seq(sc, base0))
@@ -496,25 +462,6 @@ object Dedup {
       .join(base.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(base.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"), jaccardLong(col("sh_a"), col("sh_b")).as("jaccard"))
-
-  /** Opt-in eager materialization for long-lived sessions: compute the
-    * (small) verified-pair artifact in one action, then release every
-    * intermediate cache so repeated dedup runs don't accumulate
-    * signature blocks until LRU eviction. `checkpointDir` selects a
-    * reliable (recomputable-after-executor-loss is moot: the data IS
-    * on stable storage) checkpoint instead of executor-local blocks —
-    * the right call on a real cluster, where localCheckpoint blocks
-    * die with their executor. Default callers skip all of this: the
-    * lazy plan is both faster and loss-tolerant. */
-  private def materializeAndRelease(result: DataFrame,
-      checkpointDir: Option[String], caches: Seq[DataFrame]): DataFrame = {
-    val sc = result.sparkSession.sparkContext
-    try checkpointDir match {
-      case Some(dir) =>
-        Lineage.withCheckpointDir(sc, dir)(result.checkpoint(eager = true))
-      case None => result.localCheckpoint(true)
-    } finally caches.foreach(_.unpersist(blocking = false))
-  }
 
   /** Signature table for INCREMENTAL dedup: (id, sig, sh, bh) per doc —
     * the artifact a production pipeline persists (bucketed by band
@@ -551,16 +498,16 @@ object Dedup {
     * the candidate join; exact-vs-estimate runs on candidates only.
     * The signature pass (one md5 per shingle) feeds THREE consumers
     * (band explode + both pair sides), so it is persisted for the
-    * run and released on return under the default
-    * `materialize = true` (the [[sortedNeighborPairs]] loan rule —
-    * the result is candidate-pair-sized, cheap to pin eagerly);
-    * `materialize = false` hands back the lazy plan WITH the cache
-    * held (the [[lshPairs]] lazy contract: plan inspection and
-    * one-shot sessions own the release). */
+    * run and released on return; the candidate-pair-sized result is
+    * pinned. */
   def bbitJaccardEst(docs: DataFrame, idCol: String, textCol: String,
-      b: Int = 4, numHashes: Int = 12, numBands: Int = 4,
-      materialize: Boolean = true,
-      checkpointDir: Option[String] = None): DataFrame = {
+      b: Int = 4, numHashes: Int = 12, numBands: Int = 4): DataFrame =
+    pinReleasing(bbitJaccardEstWithCaches(docs, idCol, textCol, b,
+      numHashes, numBands))
+
+  private[graft] def bbitJaccardEstWithCaches(docs: DataFrame,
+      idCol: String, textCol: String, b: Int, numHashes: Int,
+      numBands: Int): (DataFrame, Seq[DataFrame]) = {
     require(b >= 1 && b <= 16, s"b must be in [1,16], got $b")
     require(numBands >= 1 && numHashes % numBands == 0,
       s"numHashes=$numHashes must divide into numBands=$numBands")
@@ -595,8 +542,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("n_agree"),
         ((pHat - lit(c)) / (lit(1.0) - lit(c))).as("j_bbit_est"),
         jaccardLong(col("__ha"), col("__hb")).as("jaccard"))
-    if (materialize) materializeAndRelease(result, checkpointDir, Seq(base))
-    else result
+    (result, Seq(base))
   }
 
   /** Incremental near-dup pairs: verified pairs that involve at least
@@ -605,21 +551,22 @@ object Dedup {
     * Per batch the band join probes only the new docs' band keys, so
     * cost scales with BATCH size against corpus index size, not
     * corpus². Pair orientation follows the min-id keeper convention
-    * (id_a < id_b), so survivors compose across batches. */
+    * (id_a < id_b), so survivors compose across batches. Pinned like
+    * [[lshPairs]]: per batch the verified-pair artifact is small and
+    * consumed at once. */
   def incrementalLshPairs(newSigs: DataFrame, existingSigs: DataFrame,
-      threshold: Double = 0.5, numBands: Int = 4, minAgree: Int = 6,
-      materialize: Boolean = false,
-      checkpointDir: Option[String] = None): DataFrame = {
-    // Cache-release contract: same as [[lshPairs]] — the default lazy
-    // return pins one persisted intermediate (the scored-pair CSE
-    // barrier). A long-lived ingest loop calls with materialize=true
-    // (per batch the verified-pair artifact is small and consumed
-    // immediately, so the eager compute is the natural mode here).
+      threshold: Double = 0.5, numBands: Int = 4,
+      minAgree: Int = 6): DataFrame =
+    pinReleasing(incrementalLshPairsWithCaches(newSigs, existingSigs,
+      threshold, minAgree))
+
+  private[graft] def incrementalLshPairsWithCaches(newSigs: DataFrame,
+      existingSigs: DataFrame, threshold: Double,
+      minAgree: Int): (DataFrame, Seq[DataFrame]) = {
     val index = existingSigs.unionAll(newSigs)
+    // persist(): the scored-pair CSE barrier (the lshPairsWithCaches rule)
     val sc = scored(lshCandidates(newSigs, index, minAgree), index).persist()
-    val verified = sc.filter(col("jaccard") >= threshold)
-    if (!materialize) verified
-    else materializeAndRelease(verified, checkpointDir, Seq(sc))
+    (sc.filter(col("jaccard") >= threshold), Seq(sc))
   }
 
   /** Surviving ids after near-dup removal: drop any doc that has a
@@ -902,8 +849,7 @@ object Dedup {
     * ([[graft.llm.Corpus.split]]). Result materializes inside the loan
     * (clusterKeepers discipline) so the LSH caches can release. */
   def leakageSplit(docs: DataFrame, idCol: String, textCol: String,
-      trainPct: Int = 80, valPct: Int = 10,
-      checkpointDir: Option[String] = None): DataFrame =
+      trainPct: Int = 80, valPct: Int = 10): DataFrame =
     withLshPairs(docs, idCol, textCol) { pairs =>
       val clusters = graft.llm.Corpus.dupClusters(pairs)
         .withColumnRenamed("id", idCol)
@@ -911,9 +857,8 @@ object Dedup {
         .join(clusters, Seq(idCol), "left")
         .select(col(idCol),
           coalesce(col("cluster_id"), col(idCol)).as("split_root"))
-      pin(rooted.withColumn("split",
-        graft.llm.Corpus.split(col("split_root"), trainPct, valPct)),
-        checkpointDir)
+      Lineage.pin(rooted.withColumn("split",
+        graft.llm.Corpus.split(col("split_root"), trainPct, valPct)))
     }
 
   /** SoftDeDup-style sampling weights: instead of DROPPING near-dup
@@ -932,8 +877,8 @@ object Dedup {
     * cluster frame, one count aggregate on cluster_id, one left join
     * back to (id)-only rows; the weight is a narrow map. Result pins
     * inside the loan. */
-  def softDedupWeights(docs: DataFrame, idCol: String, textCol: String,
-      checkpointDir: Option[String] = None): DataFrame =
+  def softDedupWeights(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
     withLshPairs(docs, idCol, textCol) { pairs =>
       val clusters = graft.llm.Corpus.dupClusters(pairs)
         .withColumnRenamed("id", idCol)
@@ -941,12 +886,11 @@ object Dedup {
         .agg(count(lit(1)).as("__csz"))
       val base = docs.select(col(idCol))
         .join(clusters.join(sizes, Seq("cluster_id")), Seq(idCol), "left")
-      pin(base.select(col(idCol),
+      Lineage.pin(base.select(col(idCol),
         coalesce(col("cluster_id"), col(idCol)).as("cluster_id"),
         coalesce(col("__csz"), lit(1L)).cast("long").as("cluster_size"),
         (lit(1.0) / coalesce(col("__csz"), lit(1L)).cast("double"))
-          .as("weight")),
-        checkpointDir)
+          .as("weight")))
     }
 
   /** Per-group dedup savings: how many documents and TOKENS the
@@ -962,10 +906,8 @@ object Dedup {
     * back onto (id, group, token-count) rows, one map-side-combined
     * group aggregate. Token counts are exact BIGINTs. */
   def dedupSavings(docs: DataFrame, idCol: String, textCol: String,
-      groupCol: String, scoreCol: String,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val keepers = clusterKeepers(docs, idCol, textCol, scoreCol,
-      checkpointDir)
+      groupCol: String, scoreCol: String): DataFrame = {
+    val keepers = clusterKeepers(docs, idCol, textCol, scoreCol)
     docs.select(col(idCol), col(groupCol),
         size(TextAnalysis.tokens(col(textCol))).cast("long").as("__tok"))
       .join(keepers.select(col(idCol), col("kept")), Seq(idCol))
@@ -994,8 +936,8 @@ object Dedup {
     * cluster-keyed count, then a ≤ \|distinct sizes\|-row histogram
     * fold; the singleton count is total − clustered, two scalar
     * aggregates. Loan-materialized. */
-  def clusterSizeDist(docs: DataFrame, idCol: String, textCol: String,
-      checkpointDir: Option[String] = None): DataFrame =
+  def clusterSizeDist(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
     withLshPairs(docs, idCol, textCol) { pairs =>
       val clusters = graft.llm.Corpus.dupClusters(pairs)
       val sizes = clusters.groupBy("cluster_id")
@@ -1007,13 +949,12 @@ object Dedup {
       val singletons = nDocs.crossJoin(broadcast(nClustered))
         .select(lit(1L).as("cluster_size"),
           (col("__total") - col("__clustered")).as("n_clusters"))
-      pin(hist.unionByName(singletons)
+      Lineage.pin(hist.unionByName(singletons)
         .filter(col("n_clusters") > 0)
         .select(col("cluster_size").cast("long").as("cluster_size"),
           col("n_clusters").cast("long").as("n_clusters"),
           (col("cluster_size") * col("n_clusters")).cast("long")
-            .as("n_docs")),
-        checkpointDir)
+            .as("n_docs")))
     }
 
   /** Analytic LSH S-curves — the (bands, rows) PLANNER: for each
@@ -1151,11 +1092,10 @@ object Dedup {
     * prep and rank caches are released by return. */
   def blockedDedupClusters(docs: DataFrame, idCol: String, textCol: String,
       lshThreshold: Double = 0.5, snWindow: Int = 4,
-      snThreshold: Double = 0.5, maxHamming: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
+      snThreshold: Double = 0.5, maxHamming: Int = 3): DataFrame = {
     val (pairs, caches) = blockedPairsWithCaches(docs, idCol, textCol,
       lshThreshold, snWindow, snThreshold, maxHamming)
-    try graft.llm.Corpus.dupClusters(pairs, checkpointDir = checkpointDir)
+    try graft.llm.Corpus.dupClusters(pairs)
     finally caches.foreach(_.unpersist(blocking = false))
   }
 
@@ -1165,25 +1105,15 @@ object Dedup {
     * backfill writes this artifact once, and every nightly batch
     * appends [[incrementalBlockedDedupPairs]]' new-involving delta to
     * it before re-closing components. Same one-scan shared
-    * fingerprint prep, same bounded candidate contracts, same
-    * [[materializeAndRelease]] loan in the default eager form. The
-    * lazy form (`materialize = false`) hands back the plan with the
-    * INTERNAL shared-prep caches still pinned and NO handle to
-    * release them — it leaks both cached frames until LRU eviction or
-    * session end (the [[setSimJoinPairs]] warning, verbatim), so
-    * reserve it for one-shot sessions that consume the plan at once. */
+    * fingerprint prep, same bounded candidate contracts; pinned, with
+    * the shared-prep caches released. */
   def blockedDedupPairs(docs: DataFrame, idCol: String, textCol: String,
       lshThreshold: Double = 0.5, snWindow: Int = 4,
-      snThreshold: Double = 0.5, maxHamming: Int = 3,
-      materialize: Boolean = true,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val (pairs, caches) = blockedPairsWithCaches(docs, idCol, textCol,
-      lshThreshold, snWindow, snThreshold, maxHamming)
-    if (materialize) materializeAndRelease(pairs, checkpointDir, caches)
-    else pairs
-  }
+      snThreshold: Double = 0.5, maxHamming: Int = 3): DataFrame =
+    pinReleasing(blockedPairsWithCaches(docs, idCol, textCol,
+      lshThreshold, snWindow, snThreshold, maxHamming))
 
-  private def blockedPairsWithCaches(docs: DataFrame, idCol: String,
+  private[graft] def blockedPairsWithCaches(docs: DataFrame, idCol: String,
       textCol: String, lshThreshold: Double, snWindow: Int,
       snThreshold: Double, maxHamming: Int): (DataFrame, Seq[DataFrame]) = {
     checkWindow(snWindow)
@@ -1275,8 +1205,8 @@ object Dedup {
   def incrementalBlockedDedupPairs(sigTable: DataFrame,
       sortKeys: DataFrame, fpTable: DataFrame, newDocs: DataFrame,
       idCol: String, textCol: String, lshThreshold: Double = 0.5,
-      snWindow: Int = 4, snThreshold: Double = 0.5, maxHamming: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
+      snWindow: Int = 4, snThreshold: Double = 0.5,
+      maxHamming: Int = 3): DataFrame = {
     // one digest pass over the batch (the blockedDedupClusters prep,
     // on the delta only); the parameter checks run inside the try
     val prep = fingerprintPrep(newDocs, idCol, textCol).persist()
@@ -1284,7 +1214,7 @@ object Dedup {
       val (newSigs, newSk, newFps) = prepArtifacts(prep)
       incrementalBlockedDedupPairsFromArtifacts(newSigs, newSk, newFps,
         sigTable, sortKeys, fpTable, lshThreshold, snWindow,
-        snThreshold, maxHamming, checkpointDir)
+        snThreshold, maxHamming)
     } finally prep.unpersist(blocking = false)
   }
 
@@ -1302,8 +1232,7 @@ object Dedup {
       newSk: DataFrame, newFps: DataFrame, sigTable: DataFrame,
       sortKeys: DataFrame, fpTable: DataFrame,
       lshThreshold: Double = 0.5, snWindow: Int = 4,
-      snThreshold: Double = 0.5, maxHamming: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
+      snThreshold: Double = 0.5, maxHamming: Int = 3): DataFrame = {
     checkWindow(snWindow)
     checkHamming(maxHamming)
     // The LSH and sorted-neighborhood probes each materialize their
@@ -1313,20 +1242,19 @@ object Dedup {
     // straggler tail with the other's tasks, and the wall clock is
     // max(probe) instead of sum(probe). Shared upstream caches (the
     // caller's batch prep) are materialized under Spark's block-level
-    // locking, so concurrent first-use computes each block once.
+    // locking, so concurrent first-use computes each block once, and
+    // Lineage.pin takes no lock, so the two pins overlap in either mode.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val lshF = Future {
       incrementalLshPairs(newSigs, sigTable, lshThreshold,
-          numBands = 4, minAgree = 6, materialize = true,
-          checkpointDir = checkpointDir)
+          numBands = 4, minAgree = 6)
         .select(col("id_a"), col("id_b"))
     }
     val snF = Future {
       incrementalSortedNeighborPairs(sortKeys, newSk,
-          snWindow, snThreshold, materialize = true,
-          checkpointDir = checkpointDir)
+          snWindow, snThreshold)
         .select(col("id_a"), col("id_b"))
     }
     val sim = incrementalSimhashPairs(newFps, fpTable, maxHamming)
@@ -1336,8 +1264,8 @@ object Dedup {
     // sim is lazy over the batch artifacts — the final pin
     // materializes it while the caller's caches are still held; the
     // two probe results are read by nothing after it
-    try pin(lsh.unionByName(sn).unionByName(sim).distinct(), checkpointDir)
-    finally Seq(lsh, sn).foreach(unpin)
+    try Lineage.pin(lsh.unionByName(sn).unionByName(sim).distinct())
+    finally Seq(lsh, sn).foreach(Lineage.unpin)
   }
 
   /** Cluster deltas over the combined corpus after an ingest batch:
@@ -1363,16 +1291,14 @@ object Dedup {
       sortKeys: DataFrame, fpTable: DataFrame, existingPairs: DataFrame,
       newDocs: DataFrame, idCol: String, textCol: String,
       lshThreshold: Double = 0.5, snWindow: Int = 4,
-      snThreshold: Double = 0.5, maxHamming: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
+      snThreshold: Double = 0.5, maxHamming: Int = 3): DataFrame = {
     val delta = incrementalBlockedDedupPairs(sigTable, sortKeys, fpTable,
       newDocs, idCol, textCol, lshThreshold, snWindow, snThreshold,
-      maxHamming, checkpointDir)
+      maxHamming)
     graft.llm.Corpus.dupClusters(
       existingPairs.select(col("id_a"), col("id_b"))
         .unionByName(delta.select(col("id_a"), col("id_b")))
-        .distinct(),
-      checkpointDir = checkpointDir)
+        .distinct())
   }
 
   /** Split the standing pair log around a delta for the DELTA-AWARE
@@ -1444,17 +1370,15 @@ object Dedup {
       sortKeys: DataFrame, fpTable: DataFrame, existingPairs: DataFrame,
       existingClusters: DataFrame, newDocs: DataFrame, idCol: String,
       textCol: String, lshThreshold: Double = 0.5, snWindow: Int = 4,
-      snThreshold: Double = 0.5, maxHamming: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
+      snThreshold: Double = 0.5, maxHamming: Int = 3): DataFrame = {
     val delta = incrementalBlockedDedupPairs(sigTable, sortKeys, fpTable,
       newDocs, idCol, textCol, lshThreshold, snWindow, snThreshold,
-      maxHamming, checkpointDir)
+      maxHamming)
     val (touchedEdges, passThrough) =
       deltaCloseSplit(existingPairs, existingClusters, delta)
     val reclosed = graft.llm.Corpus.dupClusters(
       touchedEdges.unionByName(delta.select(col("id_a"), col("id_b")))
-        .distinct(),
-      checkpointDir = checkpointDir)
+        .distinct())
     passThrough.unionByName(reclosed)
   }
 
@@ -1473,10 +1397,9 @@ object Dedup {
     * the keeper argmax aggregates clustered docs only; the final join
     * shuffles (id, score) pairs. */
   def blockedClusterKeepers(docs: DataFrame, idCol: String,
-      textCol: String, scoreCol: String,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val clusters = blockedDedupClusters(docs, idCol, textCol,
-      checkpointDir = checkpointDir).withColumnRenamed("id", idCol)
+      textCol: String, scoreCol: String): DataFrame = {
+    val clusters = blockedDedupClusters(docs, idCol, textCol)
+      .withColumnRenamed("id", idCol)
     val base = docs.select(col(idCol), col(scoreCol))
       .join(clusters, Seq(idCol), "left")
     val keepers = base.filter(col("cluster_id").isNotNull)
@@ -1545,20 +1468,16 @@ object Dedup {
     * replace (measured 4.78 → 0.64 s min at sf0.1, window 4). */
   def sortedNeighborPairs(docs: DataFrame, idCol: String, textCol: String,
       window: Int = 4, threshold: Double = 0.5,
-      bandBits: Int = 0, materialize: Boolean = true,
-      checkpointDir: Option[String] = None): DataFrame = {
+      bandBits: Int = 0): DataFrame =
+    pinReleasing(sortedNeighborPairsWithCaches(docs, idCol, textCol,
+      window, threshold, bandBits))
+
+  private[graft] def sortedNeighborPairsWithCaches(docs: DataFrame,
+      idCol: String, textCol: String, window: Int, threshold: Double,
+      bandBits: Int): (DataFrame, Seq[DataFrame]) = {
     val (cands, g) = neighborCandidates(sortKeyTable(docs, idCol, textCol),
       "shs", ("__sa", "__sb"), window, bandBits)
-    val pairs = neighborVerified(cands, threshold)
-    // Loan closed here by default: the (small, duplicate-pair-sized)
-    // result is pinned eagerly and the ranked-frame cache released
-    // before return — the materializeAndRelease rule, so repeated
-    // calls in a long-lived session don't accumulate cached ranked
-    // frames. `materialize = false` hands back the lazy plan WITH the
-    // cache still held (the lshPairs lazy contract: callers own the
-    // release) — for plan inspection and one-shot sessions.
-    if (materialize) materializeAndRelease(pairs, checkpointDir, Seq(g))
-    else pairs
+    (neighborVerified(cands, threshold), Seq(g))
   }
 
   /** The sorted-neighborhood candidates of the full and incremental
@@ -1685,23 +1604,23 @@ object Dedup {
     * reports `<tag>_cold_prefix`, `<tag>_cold`, `<tag>_hot_prefix`
     * and `<tag>_hot`.
     *
-    * ==Cache-release contract (the [[lshPairs]] loan rule)==
-    * `materialize = true` (default) computes the pair artifact
-    * eagerly and releases every internal cache (the sorted-set base
-    * and, on the prefix path, the shingle-frequency table and the
-    * rarity-ranked prefix frame) before return; the blocked path
-    * releases the frequency table as soon as the gate has counted it.
-    * `materialize = false` hands back the LAZY plan WITH the caches
-    * still held — the caller owns the release (consume
-    * promptly in a one-shot session, or accept
-    * recompute-after-eviction); a long-lived session that opts out of
-    * materialization leaks the cached frames until LRU eviction. The
-    * gate runs two jobs in either mode: the frequency table's count
-    * (which materializes it and `base`) and the size histogram. */
+    * ==Caches==
+    * The pair artifact is pinned and every internal cache (the
+    * sorted-set base and, on the prefix path, the shingle-frequency
+    * table and the rarity-ranked prefix frame) released before
+    * return; the blocked path releases the frequency table as soon as
+    * the gate has counted it. Building the plan runs two jobs: the
+    * frequency table's count (which materializes it and `base`) and
+    * the size histogram. */
   def setSimJoinPairs(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.5, materialize: Boolean = true,
-      checkpointDir: Option[String] = None,
-      hotTokenDf: Int = 16384, saltBuckets: Int = 8): DataFrame = {
+      threshold: Double = 0.5, hotTokenDf: Int = 16384,
+      saltBuckets: Int = 8): DataFrame =
+    pinReleasing(setSimJoinPairsWithCaches(docs, idCol, textCol,
+      threshold, hotTokenDf, saltBuckets))
+
+  private[graft] def setSimJoinPairsWithCaches(docs: DataFrame,
+      idCol: String, textCol: String, threshold: Double, hotTokenDf: Int,
+      saltBuckets: Int): (DataFrame, Seq[DataFrame]) = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0,1], got $threshold")
     require(hotTokenDf >= 2, s"hotTokenDf must be >= 2, got $hotTokenDf")
@@ -1763,8 +1682,7 @@ object Dedup {
     val observed = pairs.observe(s"${obsTag}_gate",
       lit(if (gate.blocked) "blocked" else "prefix").as("path"),
       lit(gate.lb).as("lb"), lit(gate.pairs).as("pairs"), lit(gate.c).as("c"))
-    if (materialize) materializeAndRelease(observed, checkpointDir, caches)
-    else observed
+    (observed, caches)
   }
 
   /** The distinct sorted hashed-shingle set of every document with a
@@ -1986,14 +1904,17 @@ object Dedup {
     * Scale shape: one narrow banded two-level rank over n+m 10-byte
     * records (the [[sortedNeighborPairs]] construction), a
     * batch-involving candidate filter, two id-keyed shingle fetches,
-    * per-candidate Jaccard. The [[materializeAndRelease]] loan rule
-    * applies to the ranked frame; as with [[setSimJoinPairs]],
-    * `materialize = false` returns the lazy plan with that cache
-    * still held and the CALLER owns the release. */
+    * per-candidate Jaccard. Pinned, with the ranked-frame cache
+    * released. */
   def incrementalSortedNeighborPairs(stored: DataFrame, batch: DataFrame,
-      window: Int = 4, threshold: Double = 0.5, bandBits: Int = 0,
-      materialize: Boolean = true,
-      checkpointDir: Option[String] = None): DataFrame = {
+      window: Int = 4, threshold: Double = 0.5,
+      bandBits: Int = 0): DataFrame =
+    pinReleasing(incrementalSortedNeighborPairsWithCaches(stored, batch,
+      window, threshold, bandBits))
+
+  private[graft] def incrementalSortedNeighborPairsWithCaches(
+      stored: DataFrame, batch: DataFrame, window: Int, threshold: Double,
+      bandBits: Int): (DataFrame, Seq[DataFrame]) = {
     val keys = stored.select(col("id"), col("sh"), lit(false).as("new"))
       .unionByName(batch.select(col("id"), col("sh"), lit(true).as("new")))
     val (cands, g) = neighborCandidates(keys, "new", ("__na", "__nb"),
@@ -2005,7 +1926,6 @@ object Dedup {
         Seq("__ia"))
       .join(lib.select(col("id").as("__ib"), col("shs").as("__sb")),
         Seq("__ib")), threshold)
-    if (materialize) materializeAndRelease(pairs, checkpointDir, Seq(g))
-    else pairs
+    (pairs, Seq(g))
   }
 }

@@ -1,46 +1,45 @@
 package graft.llm
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 
-/** Lineage-truncation plumbing shared by the iterative operators
-  * (Corpus.bigStarClusters, Similarity.kmeansCentroids) and the
-  * opt-in materializing dedup paths (Dedup.lshPairs).
-  *
-  * `SparkContext.setCheckpointDir` is GLOBAL session state, and the
-  * value it stores is the qualified `dir/<UUID>` — so a naive
-  * "set if different" guard compares apples to oranges and re-points
-  * the session's checkpoint dir on every call, silently clobbering
-  * whatever the caller had configured. [[withCheckpointDir]] scopes
-  * the change instead: set, run the (eager — every checkpoint action
-  * must complete inside the scope) body, restore. */
+/** Lineage plumbing shared by the iterative operators and the pinned
+  * pair artifacts of the dedup family. */
 object Lineage {
 
-  /** Run `body` with the context's checkpoint dir pointed at `dir`,
-    * restoring the previous configuration afterwards. Restoration
-    * re-qualifies: if a dir was set before, checkpoints after this
-    * call land in a fresh UUID subdirectory UNDER the previously
-    * qualified path (Spark offers no way to re-point at an existing
-    * qualified dir) — same root, so any caller contract of the form
-    * "my checkpoints live under X" still holds. If no dir was set
-    * before, the context is returned to the unset state.
+  /** The ONE pin rule. Every iterative operator's per-round truncation
+    * (Corpus.bigStarClusters, Similarity's k-means and PQ rounds, the
+    * GraphOps iterations) and every eager pair artifact (the public
+    * Dedup pair functions, the loan consumers, winnowPairs) pins
+    * through here:
     *
-    * Scoped calls are SERIALIZED (one global lock): the checkpoint dir
-    * is process-global mutable state, and two overlapping scopes would
-    * otherwise checkpoint into each other's directories mid-iteration
-    * and "restore" each other's temporary value as permanent. The lock
-    * is held for the whole body — concurrent reliable-checkpoint
-    * pipelines in one driver queue behind each other, which is the
-    * safe (and rare) case. */
-  def withCheckpointDir[T](sc: SparkContext, dir: String)(body: => T): T =
-    lock.synchronized {
-      val prev = sc.getCheckpointDir
-      sc.setCheckpointDir(dir)
-      try body
-      finally sc.setCheckpointDir(prev.orNull) // Option(null) → unset
-    }
+    *   - a reliable eager `checkpoint` when the context has a
+    *     checkpoint dir (`sc.setCheckpointDir` or `spark.checkpoint.dir`)
+    *     — the deployment setting for a real cluster, where
+    *     executor-local blocks die with their executor and a lost one
+    *     leaves no lineage to recompute, while the files survive it;
+    *   - an eager `localCheckpoint` otherwise — zero setup, right for
+    *     local mode and short jobs.
+    *
+    * The choice is Spark's own deployment-level setting, read per
+    * call: no operator takes a dir, and nothing here changes the
+    * context's checkpoint dir, so concurrent pins never serialize.
+    * Both forms are eager (the rows are computed by return) and cut
+    * the lineage, so a caller may release the caches the pinned plan
+    * read as soon as this returns. */
+  def pin(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint(eager = true)
+    else df.localCheckpoint(true)
 
-  private val lock = new Object
+  /** Release the blocks [[pin]] holds for a result that nothing reads
+    * any more: every local-checkpoint RDD under `df` (a reliable
+    * checkpoint holds none; its files stay). */
+  def unpin(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** Freshness fingerprint of a frame's FILE inputs: one 64-bit fold
     * over the sorted (path, length, modificationTime) of every leaf

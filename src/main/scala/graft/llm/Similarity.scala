@@ -251,20 +251,12 @@ object Similarity {
     * q75's rows-only IVF gate; [[semDedup]] trains with exact means so
     * the WHOLE operator (clustering included) hash-gates. */
   def kmeansCentroids(corpus: DataFrame, k: Int = 16, iters: Int = 2,
-      dims: Int = 64, checkpointDir: Option[String] = None,
-      exactMeans: Boolean = false): DataFrame = {
-    // Per-round lineage truncation (the Bpe.train / bigStarClusters
-    // discipline): without it every iteration's plan embeds the
-    // previous one's — analysis/optimization cost and recompute depth
-    // grow superlinearly in `iters`. The centroid table is k rows, so
-    // truncation is O(k) per round. Default localCheckpoint(eager) is
-    // right for local mode; pass checkpointDir for a reliable
-    // HDFS/object-store checkpoint that survives executor loss on a
-    // real cluster (same knob as Corpus.bigStarClusters). The global
-    // checkpoint-dir change is SCOPED (set → iterate → restore, see
-    // Lineage.withCheckpointDir) — every checkpoint is eager, so all
-    // writes land inside the scope and the session's own setting is
-    // back in place when this returns.
+      dims: Int = 64, exactMeans: Boolean = false): DataFrame = {
+    // Per-round lineage truncation (Lineage.pin): without it every
+    // iteration's plan embeds the previous one's — analysis/
+    // optimization cost and recompute depth grow superlinearly in
+    // `iters`. The centroid table is k rows, so truncation is O(k)
+    // per round.
     // one corpus pass TOTAL, not one per round: the prepped
     // (vec_id, embedding, nrm) frame is persisted so every Lloyd
     // round's eager truncation re-reads cached columnar blocks
@@ -272,7 +264,7 @@ object Similarity {
     // this is the difference between iters corpus scans and one
     // (the iteration itself only ever moves k-row centroid tables)
     val prep = kmeansPrep(corpus).persist()
-    try kmeansOnPrep(prep, k, iters, dims, checkpointDir, exactMeans)
+    try kmeansOnPrep(prep, k, iters, dims, exactMeans)
     finally prep.unpersist(blocking = false)
   }
 
@@ -338,8 +330,7 @@ object Similarity {
     * the caller owns the cache (the [[pqTrainOnSubs]] contract).
     * Memoized per (session, prep plan, params) — see [[kmMemo]]. */
   private def kmeansOnPrep(prep: DataFrame, k: Int, iters: Int,
-      dims: Int, checkpointDir: Option[String],
-      exactMeans: Boolean): DataFrame = {
+      dims: Int, exactMeans: Boolean): DataFrame = {
     val sp = prep.sparkSession
     val key = (sp, prep.queryExecution.analyzed.canonicalized,
       Lineage.inputSnapshot(prep), k, iters, dims, exactMeans)
@@ -347,8 +338,7 @@ object Similarity {
       case Some(rows) =>
         sp.createDataFrame(rows.toIndexedSeq).toDF("cid", "c_emb")
       case None =>
-        val cents = kmeansOnPrepUncached(prep, k, iters, dims,
-          checkpointDir, exactMeans)
+        val cents = kmeansOnPrepUncached(prep, k, iters, dims, exactMeans)
         val rows = cents.collect().map(r =>
           (r.getLong(0), r.getSeq[Double](1)))
         kmMemo.synchronized(kmMemo.put(key, rows))
@@ -357,37 +347,26 @@ object Similarity {
   }
 
   private def kmeansOnPrepUncached(prep: DataFrame, k: Int, iters: Int,
-      dims: Int, checkpointDir: Option[String],
-      exactMeans: Boolean): DataFrame = {
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(true)
-    def run(): DataFrame = {
-      var cents = prep.filter(col("vec_id") < k)
-        .select(col("vec_id").as("cid"),
-          transform(col("embedding"), x => x.cast("double")).as("c_emb"))
-      for (_ <- 1 to iters) {
-        val c = broadcast(cents.select(col("cid"), col("c_emb"),
-          norm(col("c_emb")).as("c_nrm")))
-        val assigned = pick1(prep.crossJoin(c)
-          .withColumn("__d", cosPre(col("embedding"), col("c_emb"), col("nrm"), col("c_nrm"))),
-          Seq("vec_id"), Seq("embedding"), maximize = true)
-        def mean(i: Int): Column =
-          if (exactMeans)
-            sum(element_at(col("embedding"), i + 1).cast("double")
-              .cast(org.apache.spark.sql.types.DecimalType(30, 12))).cast("double") /
-              count(lit(1))
-          else avg(element_at(col("embedding"), i + 1).cast("double"))
-        cents = truncate(assigned.groupBy(col("cid"))
-          .agg(array((0 until dims).map(mean): _*).as("c_emb")))
-      }
-      cents
+      dims: Int, exactMeans: Boolean): DataFrame = {
+    var cents = prep.filter(col("vec_id") < k)
+      .select(col("vec_id").as("cid"),
+        transform(col("embedding"), x => x.cast("double")).as("c_emb"))
+    for (_ <- 1 to iters) {
+      val c = broadcast(cents.select(col("cid"), col("c_emb"),
+        norm(col("c_emb")).as("c_nrm")))
+      val assigned = pick1(prep.crossJoin(c)
+        .withColumn("__d", cosPre(col("embedding"), col("c_emb"), col("nrm"), col("c_nrm"))),
+        Seq("vec_id"), Seq("embedding"), maximize = true)
+      def mean(i: Int): Column =
+        if (exactMeans)
+          sum(element_at(col("embedding"), i + 1).cast("double")
+            .cast(org.apache.spark.sql.types.DecimalType(30, 12))).cast("double") /
+            count(lit(1))
+        else avg(element_at(col("embedding"), i + 1).cast("double"))
+      cents = Lineage.pin(assigned.groupBy(col("cid"))
+        .agg(array((0 until dims).map(mean): _*).as("c_emb")))
     }
-    checkpointDir match {
-      case Some(dir) =>
-        Lineage.withCheckpointDir(prep.sparkSession.sparkContext, dir)(run())
-      case None => run()
-    }
+    cents
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
@@ -408,15 +387,13 @@ object Similarity {
     * bit-reproducible and the whole operator hash-gates against a
     * DuckDB replay of the full training run (q134). */
   def semDedup(vectors: DataFrame, idCol: String, embCol: String,
-      tau: Double, k: Int = 8, iters: Int = 2, dims: Int = 64,
-      checkpointDir: Option[String] = None): DataFrame = {
+      tau: Double, k: Int = 8, iters: Int = 2, dims: Int = 64): DataFrame = {
     val v = vectors.select(col(idCol).as("vec_id"), col(embCol).as("embedding"))
     // one prep pass serves training (eager rounds warm the cache) AND
     // the final assignment (lazy — the returned plan pins the cache,
     // the pqTopK/seenWindowStats contract)
     val prep = kmeansPrep(v).persist()
-    val cents = kmeansOnPrep(prep, k, iters, dims, checkpointDir,
-      exactMeans = true)
+    val cents = kmeansOnPrep(prep, k, iters, dims, exactMeans = true)
     val c = broadcast(cents.select(col("cid"), col("c_emb"),
       norm(col("c_emb")).as("c_nrm")))
     val assigned = pick1(prep
@@ -490,7 +467,7 @@ object Similarity {
     * subvector table — the caller owns the cache. Memoized per
     * (session, subs plan, params) — see [[kmMemo]]'s rationale. */
   private def pqTrainOnSubs(subs: DataFrame, m: Int, ksub: Int,
-      iters: Int, dims: Int, checkpointDir: Option[String]): DataFrame = {
+      iters: Int, dims: Int): DataFrame = {
     val sp = subs.sparkSession
     val key = (sp, subs.queryExecution.analyzed.canonicalized,
       Lineage.inputSnapshot(subs), m, ksub, iters, dims)
@@ -498,8 +475,7 @@ object Similarity {
       case Some(rows) =>
         sp.createDataFrame(rows.toIndexedSeq).toDF("sub", "cid", "c")
       case None =>
-        val books = pqTrainOnSubsUncached(subs, m, ksub, iters, dims,
-          checkpointDir)
+        val books = pqTrainOnSubsUncached(subs, m, ksub, iters, dims)
         val rows = books.collect().map(r =>
           (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
         pqMemo.synchronized(pqMemo.put(key, rows))
@@ -508,53 +484,42 @@ object Similarity {
   }
 
   private def pqTrainOnSubsUncached(subs: DataFrame, m: Int, ksub: Int,
-      iters: Int, dims: Int, checkpointDir: Option[String]): DataFrame = {
+      iters: Int, dims: Int): DataFrame = {
     require(dims % m == 0, s"dims=$dims not divisible by m=$m")
     val dsub = dims / m
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(true)
-    def run(): DataFrame = {
-      var books = subs.filter(col("vec_id") < ksub)
-        .select(col("sub"), col("vec_id").cast("int").as("cid"),
-          col("sv").as("c"))
-      for (_ <- 1 to iters) {
-        val b = broadcast(books.withColumn("cc", dot(col("c"), col("c"))))
-        val assigned = pick1(subs.join(b, Seq("sub"))
-          .withColumn("__d", l2ByDots(col("xx"), col("cc"), col("sv"), col("c"))),
-          Seq("vec_id", "sub"), Seq("sv"), maximize = false)
-        // per-element exact-decimal mean; a cell that loses every
-        // member KEEPS its previous centroid (left join + coalesce) —
-        // unlike kmeansCentroids' shrink-k behavior, PQ's flattened
-        // ADC lookup (s·ksub + code) requires a dense m×ksub codebook
-        val upd = assigned.groupBy(col("sub"), col("cid"))
-          .agg(array((0 until dsub).map(i =>
-            sum(element_at(col("sv"), i + 1)
-              .cast(org.apache.spark.sql.types.DecimalType(30, 12))).cast("double") /
-              count(lit(1))): _*).as("cNew"))
-        books = truncate(books.select(col("sub"), col("cid"), col("c"))
-          .join(upd, Seq("sub", "cid"), "left")
-          .select(col("sub"), col("cid"),
-            coalesce(col("cNew"), col("c")).as("c")))
-      }
-      books
+    var books = subs.filter(col("vec_id") < ksub)
+      .select(col("sub"), col("vec_id").cast("int").as("cid"),
+        col("sv").as("c"))
+    for (_ <- 1 to iters) {
+      val b = broadcast(books.withColumn("cc", dot(col("c"), col("c"))))
+      val assigned = pick1(subs.join(b, Seq("sub"))
+        .withColumn("__d", l2ByDots(col("xx"), col("cc"), col("sv"), col("c"))),
+        Seq("vec_id", "sub"), Seq("sv"), maximize = false)
+      // per-element exact-decimal mean; a cell that loses every
+      // member KEEPS its previous centroid (left join + coalesce) —
+      // unlike kmeansCentroids' shrink-k behavior, PQ's flattened
+      // ADC lookup (s·ksub + code) requires a dense m×ksub codebook
+      val upd = assigned.groupBy(col("sub"), col("cid"))
+        .agg(array((0 until dsub).map(i =>
+          sum(element_at(col("sv"), i + 1)
+            .cast(org.apache.spark.sql.types.DecimalType(30, 12))).cast("double") /
+            count(lit(1))): _*).as("cNew"))
+      books = Lineage.pin(books.select(col("sub"), col("cid"), col("c"))
+        .join(upd, Seq("sub", "cid"), "left")
+        .select(col("sub"), col("cid"),
+          coalesce(col("cNew"), col("c")).as("c")))
     }
-    checkpointDir match {
-      case Some(dir) =>
-        Lineage.withCheckpointDir(subs.sparkSession.sparkContext, dir)(run())
-      case None => run()
-    }
+    books
   }
 
   def pqTrain(corpus: DataFrame, m: Int = 4, ksub: Int = 8,
-      iters: Int = 2, dims: Int = 64,
-      checkpointDir: Option[String] = None): DataFrame = {
+      iters: Int = 2, dims: Int = 64): DataFrame = {
     // one corpus pass TOTAL (the kmeansCentroids rule): the subvector
     // table feeds every Lloyd round's eager truncation — persist it so
     // rounds re-read cached blocks instead of re-scanning the corpus
     // and re-exploding the subvectors per round
     val subs = pqSubs(corpus, m, dims).persist()
-    try pqTrainOnSubs(subs, m, ksub, iters, dims, checkpointDir)
+    try pqTrainOnSubs(subs, m, ksub, iters, dims)
     finally subs.unpersist(blocking = false)
   }
 
@@ -602,7 +567,7 @@ object Similarity {
     // same contract as BloomFilter.seenWindowStats; sized
     // corpus×m×(dsub doubles), LRU-evicted)
     val subs = pqSubs(corpus, m, dims).persist()
-    val books = pqTrainOnSubs(subs, m, ksub, iters, dims, None)
+    val books = pqTrainOnSubs(subs, m, ksub, iters, dims)
     val codes = pqEncodeOnSubs(subs, books)
     val b = broadcast(books.withColumn("cc", dot(col("c"), col("c"))))
     val lut = subVectors(
@@ -643,11 +608,9 @@ object Similarity {
     * train + assign. Bit-identical to the two-call composition. */
   def ivfTrainedTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       nlist: Int = 16, nprobe: Int = 2, iters: Int = 2, dims: Int = 64,
-      exactMeans: Boolean = true,
-      checkpointDir: Option[String] = None): DataFrame = {
+      exactMeans: Boolean = true): DataFrame = {
     val prep = kmeansPrep(corpus).persist()
-    val cents = kmeansOnPrep(prep, nlist, iters, dims, checkpointDir,
-      exactMeans)
+    val cents = kmeansOnPrep(prep, nlist, iters, dims, exactMeans)
     ivfTopKOnPrep(queries, prep, k, nlist, nprobe, Some(cents))
   }
 
@@ -742,8 +705,8 @@ object Similarity {
     val prep = kmeansPrep(corpus).persist()
     val subs = pqPrepSubs(prep, m, dims).persist()
     val centsF = Future(kmeansOnPrep(prep, nlist, coarseIters, dims,
-      None, exactMeans = true))
-    val booksF = Future(pqTrainOnSubs(subs, m, ksub, pqIters, dims, None))
+      exactMeans = true))
+    val booksF = Future(pqTrainOnSubs(subs, m, ksub, pqIters, dims))
     val cents = Await.result(centsF, Duration.Inf)
     val books = Await.result(booksF, Duration.Inf)
     ivfPqScore(queries, prep, subs, books,
@@ -760,7 +723,7 @@ object Similarity {
     // shared subvector pass, as in [[pqTopK]] (train warms, encode
     // pins); prep already carries the parallelism floor
     val subs = pqPrepSubs(prep, m, dims).persist()
-    val books = pqTrainOnSubs(subs, m, ksub, iters, dims, None)
+    val books = pqTrainOnSubs(subs, m, ksub, iters, dims)
     ivfPqScore(queries, prep, subs, books,
       resolveCents(prep, nlist, centroids), k, nprobe, m, ksub, dims)
   }
@@ -845,7 +808,7 @@ object Similarity {
     val prep = kmeansPrep(corpus).persist()
     try {
       val cents = centroids.getOrElse(kmeansOnPrep(prep, k, iters, dims,
-        None, exactMeans = false))
+        exactMeans = false))
       cents.write.mode("overwrite").parquet(s"$indexPath/centroids")
       val c = broadcast(cents.select(col("cid"), col("c_emb"),
         norm(col("c_emb")).as("c_nrm")))
@@ -908,7 +871,7 @@ object Similarity {
     // persisted for training AND encoding and released on exit
     val subs = pqSubs(corpus, m, dims).persist()
     try {
-      val books = pqTrainOnSubs(subs, m, ksub, iters, dims, None)
+      val books = pqTrainOnSubs(subs, m, ksub, iters, dims)
       books.write.mode("overwrite").parquet(s"$indexPath/books")
       val c = broadcast(cents
         .select(col("cid"), col("c_emb"), norm(col("c_emb")).as("c_nrm")))

@@ -2241,8 +2241,7 @@ object TextAnalysis {
     * loan-escape discipline). */
   def winnowPairs(docs: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, k: Int = 4, w: Int = 4, minShared: Long = 2,
-      maxDf: Int = 64,
-      checkpointDir: Option[String] = None): org.apache.spark.sql.DataFrame = {
+      maxDf: Int = 64): org.apache.spark.sql.DataFrame = {
     require(minShared >= 1 && maxDf >= 2,
       s"need minShared >= 1 and maxDf >= 2, got $minShared, $maxDf")
     val base = winnowFingerprints(docs, idCol, textCol, k, w)
@@ -2265,12 +2264,7 @@ object TextAnalysis {
         .select(col("id_a"), col("id_b"), col("shared"),
           (col("shared").cast("double") /
             least(col("__na"), col("__nb")).cast("double")).as("overlap"))
-      checkpointDir match {
-        case Some(dir) => Lineage.withCheckpointDir(
-          pairsDf.sparkSession.sparkContext, dir)(
-          pairsDf.checkpoint(eager = true))
-        case None => pairsDf.localCheckpoint(true)
-      }
+      Lineage.pin(pairsDf)
     } finally fp.unpersist(blocking = false)
   }
 

@@ -2,30 +2,14 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.llm.Lineage.pin
 
 /** Graph analytics over edge frames. Connected components (the dedup
   * clusterer) lives with the dedup family in [[graft.llm.Dedup]];
-  * this hosts the rank/centrality side.
+  * this hosts the rank/centrality side. Every iterative operator
+  * truncates its per-round lineage with [[graft.llm.Lineage.pin]].
   */
 object GraphOps {
-
-  /** Per-round lineage truncation: reliable `checkpoint` when
-    * `checkpointDir` is set — the mode for a preemptible 100×
-    * cluster, where executor-local blocks die with their executor
-    * and a lost one kills a long iteration with no lineage left to
-    * recompute — executor-local `localCheckpoint` otherwise (right
-    * for local mode and short jobs). The
-    * [[graft.llm.Corpus.bigStarClusters]] / dedup-family discipline;
-    * every iterative operator here threads the option through. The
-    * dir change is SCOPED per pin (set → checkpoint eagerly →
-    * restore), so the session's global checkpoint setting is
-    * untouched. */
-  private def pin(df: DataFrame, checkpointDir: Option[String]): DataFrame =
-    checkpointDir match {
-      case Some(dir) => graft.llm.Lineage.withCheckpointDir(
-        df.sparkSession.sparkContext, dir)(df.checkpoint(eager = true))
-      case None => df.localCheckpoint(true)
-    }
 
   /** Weighted PageRank (Brin & Page 1998) with a FIXED iteration
     * count — the importance/centrality readout over any edge frame
@@ -49,13 +33,12 @@ object GraphOps {
     * fold — the standard distributed PageRank shape (edges never
     * materialize per-pair state beyond themselves). Edge/out-weight
     * frames are materialized once and the rank frame per iteration
-    * (localCheckpoint) so the plan stays linear in `iters` instead
+    * (Lineage.pin) so the plan stays linear in `iters` instead
     * of re-deriving the edge aggregation exponentially. N rides as a
     * broadcast 1-row frame — no driver collect anywhere. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: Option[String] = None, iters: Int = 3,
-      damping: Double = 0.85,
-      checkpointDir: Option[String] = None): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     import graft.functions.GraftFunctions.dsum
     require(iters >= 1 && iters <= 50,
       s"iters must be in [1,50], got $iters")
@@ -69,13 +52,13 @@ object GraphOps {
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .groupBy(col(srcCol).as("src"), col(dstCol).as("dst"))
       .agg(wAgg.as("w"))
-      .transform(pin(_, checkpointDir))
+      .transform(pin)
     val outw = e.groupBy(col("src")).agg(dsum(col("w"), 12).as("__ow"))
-    val ew = e.join(outw, Seq("src")).transform(pin(_, checkpointDir))
+    val ew = e.join(outw, Seq("src")).transform(pin)
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct()
-      .transform(pin(_, checkpointDir))
+      .transform(pin)
     val nFrame = nodes.agg(count(lit(1)).cast("long").as("__n"))
     // The rank frame CARRIES the per-node dangling flag (r19): the
     // set of nodes without out-edges is fixed, so the per-iteration
@@ -92,7 +75,7 @@ object GraphOps {
       .select(col("node"),
         (lit(1.0) / col("__n").cast("double")).as("rank"),
         col("__has_out").isNull.as("__dang"))
-      .transform(pin(_, checkpointDir))
+      .transform(pin)
     for (_ <- 1 to iters) {
       val dangling = ranks.filter(col("__dang"))
         .agg(coalesce(dsum(col("rank"), 12), lit(0.0)).as("__dm"))
@@ -110,7 +93,7 @@ object GraphOps {
             lit(damping) * (coalesce(col("__sum"), lit(0.0)) +
               col("__dm") / col("__n").cast("double"))).as("rank"),
           col("__dang"))
-        .transform(pin(_, checkpointDir))
+        .transform(pin)
     }
     ranks.select(col("node"), col("rank"))
       .orderBy(col("rank").desc, col("node").asc)
@@ -137,8 +120,7 @@ object GraphOps {
   def personalizedPageRank(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: DataFrame, seedCol: String,
       weightCol: Option[String] = None, iters: Int = 3,
-      damping: Double = 0.85,
-      checkpointDir: Option[String] = None): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     import graft.functions.GraftFunctions.dsum
     require(iters >= 1 && iters <= 50,
       s"iters must be in [1,50], got $iters")
@@ -152,9 +134,9 @@ object GraphOps {
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .groupBy(col(srcCol).as("src"), col(dstCol).as("dst"))
       .agg(wAgg.as("w"))
-      .transform(pin(_, checkpointDir))
+      .transform(pin)
     val outw = e.groupBy(col("src")).agg(dsum(col("w"), 12).as("__ow"))
-    val ew = e.join(outw, Seq("src")).transform(pin(_, checkpointDir))
+    val ew = e.join(outw, Seq("src")).transform(pin)
     val nodes0 = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct()
@@ -177,11 +159,11 @@ object GraphOps {
           lit(1.0) / col("__ns").cast("double"))
           .otherwise(lit(0.0)).as("__t"),
         col("__has_out").isNull.as("__dang"))
-      .transform(pin(_, checkpointDir))
+      .transform(pin)
     require(!nodes.where(col("__t") > 0.0).isEmpty,
       "personalizedPageRank: no seed is a node of the graph")
     var ranks = nodes.select(col("node"), col("__t"), col("__dang"),
-      col("__t").as("rank")).transform(pin(_, checkpointDir))
+      col("__t").as("rank")).transform(pin)
     for (_ <- 1 to iters) {
       val dangling = ranks.filter(col("__dang"))
         .agg(coalesce(dsum(col("rank"), 12), lit(0.0)).as("__dm"))
@@ -197,7 +179,7 @@ object GraphOps {
           (lit(1.0 - damping) * col("__t") +
             lit(damping) * (coalesce(col("__sum"), lit(0.0)) +
               col("__dm") * col("__t"))).as("rank"))
-        .transform(pin(_, checkpointDir))
+        .transform(pin)
     }
     ranks.select(col("node"), col("rank"))
       .orderBy(col("rank").desc, col("node").asc)
@@ -226,8 +208,8 @@ object GraphOps {
     * Σ deg², both joins node-keyed, per-node counts from a 3-way
     * explode of the triangle frame. Nothing enumerates non-edges. */
   def triangleStats(edges: DataFrame, srcCol: String,
-      dstCol: String, checkpointDir: Option[String] = None): DataFrame = {
-    val e = undirectedSimple(edges, srcCol, dstCol).transform(pin(_, checkpointDir))
+      dstCol: String): DataFrame = {
+    val e = undirectedSimple(edges, srcCol, dstCol).transform(pin)
     val deg = e.select(col("a").as("node"))
       .unionByName(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).cast("long").as("degree"))
@@ -260,9 +242,9 @@ object GraphOps {
     * fold with decimal-rounded 1/ln terms. Common neighbors have
     * degree ≥ 2 by construction, so ln never sees 1. */
   def adamicAdar(edges: DataFrame, srcCol: String,
-      dstCol: String, checkpointDir: Option[String] = None): DataFrame = {
+      dstCol: String): DataFrame = {
     import graft.functions.GraftFunctions.dsum
-    val e = undirectedSimple(edges, srcCol, dstCol).transform(pin(_, checkpointDir))
+    val e = undirectedSimple(edges, srcCol, dstCol).transform(pin)
     val adj = e.select(col("a").as("node"), col("b").as("nbr"))
       .unionByName(e.select(col("b").as("node"), col("a").as("nbr")))
     val deg = adj.groupBy(col("node"))
@@ -294,9 +276,9 @@ object GraphOps {
     * fetches onto the edge frame, ONE moment fold with
     * decimal-rounded terms — no iteration, nothing quadratic. */
   def degreeAssortativity(edges: DataFrame, srcCol: String,
-      dstCol: String, checkpointDir: Option[String] = None): DataFrame = {
+      dstCol: String): DataFrame = {
     import graft.functions.GraftFunctions.dsum
-    val e = undirectedSimple(edges, srcCol, dstCol).transform(pin(_, checkpointDir))
+    val e = undirectedSimple(edges, srcCol, dstCol).transform(pin)
     val adj = e.select(col("a").as("node"), col("b").as("nbr"))
       .unionByName(e.select(col("b").as("node"), col("a").as("nbr")))
     val deg = adj.groupBy(col("node"))
@@ -338,20 +320,19 @@ object GraphOps {
     *
     * Scale shape: per round ONE node-keyed adj⋈labels join, one
     * (node, label) count, one per-node top-1 window — all keyed on
-    * nodes; label frames localCheckpoint per round (plan linear in
+    * nodes; label frames pinned per round (plan linear in
     * rounds). */
   def labelPropagation(edges: DataFrame, srcCol: String,
-      dstCol: String, rounds: Int = 4,
-      checkpointDir: Option[String] = None): DataFrame = {
+      dstCol: String, rounds: Int = 4): DataFrame = {
     require(rounds >= 1 && rounds <= 50,
       s"rounds must be in [1,50], got $rounds")
-    val e = undirectedSimple(edges, srcCol, dstCol).transform(pin(_, checkpointDir))
+    val e = undirectedSimple(edges, srcCol, dstCol).transform(pin)
     val adj = e.select(col("a").as("node"), col("b").as("nbr"))
       .unionByName(e.select(col("b").as("node"), col("a").as("nbr")))
-      .transform(pin(_, checkpointDir))
-    val nodes = adj.select(col("node")).distinct().transform(pin(_, checkpointDir))
+      .transform(pin)
+    val nodes = adj.select(col("node")).distinct().transform(pin)
     var labels = nodes.select(col("node"), col("node").as("label"))
-      .transform(pin(_, checkpointDir))
+      .transform(pin)
     for (_ <- 1 to rounds) {
       val votes = adj
         .join(labels.select(col("node").as("nbr"),
@@ -369,7 +350,7 @@ object GraphOps {
       labels = labels.join(pick, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("__new"), col("label")).as("label"))
-        .transform(pin(_, checkpointDir))
+        .transform(pin)
     }
     labels.orderBy(col("node"))
   }
@@ -384,24 +365,23 @@ object GraphOps {
     *
     * Scale shape: per round ONE node-keyed adj⋈dist join + a
     * node-keyed min — the LPA/pageRank iteration shape; dist frames
-    * localCheckpoint per round. Seeds outside the graph are ignored;
+    * pinned per round. Seeds outside the graph are ignored;
     * at least one must be a node. */
   def seedDistances(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, maxHops: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
+      seeds: DataFrame, seedCol: String, maxHops: Int = 3): DataFrame = {
     require(maxHops >= 1 && maxHops <= 50,
       s"maxHops must be in [1,50], got $maxHops")
-    val e = undirectedSimple(edges, srcCol, dstCol).transform(pin(_, checkpointDir))
+    val e = undirectedSimple(edges, srcCol, dstCol).transform(pin)
     val adj = e.select(col("a").as("node"), col("b").as("nbr"))
       .unionByName(e.select(col("b").as("node"), col("a").as("nbr")))
-      .transform(pin(_, checkpointDir))
+      .transform(pin)
     val nodes = adj.select(col("node")).distinct()
     val seedSet = seeds.select(col(seedCol).as("node")).distinct()
       .join(nodes, Seq("node"))
       .select(col("node"), lit(0L).as("__sd"))
     var dist = nodes.join(seedSet, Seq("node"), "left")
       .select(col("node"), col("__sd").as("distance"))
-      .transform(pin(_, checkpointDir))
+      .transform(pin)
     require(!dist.where(col("distance").isNotNull).isEmpty,
       "seedDistances: no seed is a node of the graph")
     for (_ <- 1 to maxHops) {
@@ -414,7 +394,7 @@ object GraphOps {
       dist = dist.join(relax, Seq("node"), "left")
         .select(col("node"),
           least(col("distance"), col("__via")).as("distance"))
-        .transform(pin(_, checkpointDir))
+        .transform(pin)
     }
     dist.orderBy(col("distance").asc_nulls_last, col("node").asc)
   }
@@ -431,14 +411,13 @@ object GraphOps {
     *
     * Same determinism and scale shape as [[pageRank]]: decimal-
     * rounded term sums, one keyed join + fold per half-step on the
-    * collapsed edge frame, score frames localCheckpointed per
+    * collapsed edge frame, score frames pinned per
     * iteration, N and the normalizers ride as broadcast 1-row
     * frames. Nodes with no in-edges hold authority 0 (hubs likewise
     * without out-edges); degenerate graphs where a whole side sums
     * to 0 keep the previous scores rather than dividing by zero. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: Option[String] = None, iters: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
+      weightCol: Option[String] = None, iters: Int = 3): DataFrame = {
     import graft.functions.GraftFunctions.dsum
     require(iters >= 1 && iters <= 50,
       s"iters must be in [1,50], got $iters")
@@ -450,17 +429,17 @@ object GraphOps {
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .groupBy(col(srcCol).as("src"), col(dstCol).as("dst"))
       .agg(wAgg.as("w"))
-      .transform(pin(_, checkpointDir))
+      .transform(pin)
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct()
-      .transform(pin(_, checkpointDir))
+      .transform(pin)
     val nFrame = nodes.agg(count(lit(1)).cast("long").as("__n"))
     var scores = nodes.crossJoin(broadcast(nFrame))
       .select(col("node"),
         (lit(1.0) / col("__n").cast("double")).as("hub"),
         (lit(1.0) / col("__n").cast("double")).as("auth"))
-      .transform(pin(_, checkpointDir))
+      .transform(pin)
     // Per half-step the score frame is its own node carrier (r19):
     // the previous auth/hub fallbacks already ride the frame, so the
     // separate node-frame join and the self-join on the previous
@@ -480,7 +459,7 @@ object GraphOps {
           when(col("__as") > 0.0,
             coalesce(col("__a"), lit(0.0)) / col("__as"))
             .otherwise(col("auth")).as("auth"))
-        .transform(pin(_, checkpointDir))
+        .transform(pin)
       val hRaw = e.join(withA, e("dst") === withA("node"))
         .select(col("src"), (col("auth") * col("w")).as("__t"))
         .groupBy(col("src")).agg(dsum(col("__t"), 12).as("__h"))
@@ -494,7 +473,7 @@ object GraphOps {
             coalesce(col("__h"), lit(0.0)) / col("__hs"))
             .otherwise(col("hub")).as("hub"),
           col("auth"))
-        .transform(pin(_, checkpointDir))
+        .transform(pin)
     }
     scores.select(col("node"), col("hub"), col("auth"))
       .orderBy(col("auth").desc, col("node").asc)

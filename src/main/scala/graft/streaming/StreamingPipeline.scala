@@ -346,12 +346,12 @@ object StreamingPipeline {
     * One checkpoint lineage owns a sink directory (epoch = that
     * stream's batchId — same contract as the metric-state `v=N`
     * versioning); StreamingSpec pins the mid-batch kill + restart. */
-  private[streaming] def corpusIngestBatch(batch: DataFrame,
+  private[graft] def corpusIngestBatch(batch: DataFrame,
       corpusDir: String, sigDir: String, weights: Map[String, Double],
       defaultWeight: Double, threshold: Double,
       packDir: Option[String] = None, packTopN: Int = 8,
       seqLen: Int = 128, shardId: Long = 0L): Unit = {
-    import graft.llm.{Corpus, Dedup, TextAnalysis}
+    import graft.llm.{Corpus, Dedup, Lineage, TextAnalysis}
     val spark = batch.sparkSession
     // mixture first (pure filter, cheapest), then C4 cleaning; the
     // clean frame re-attaches `source` for the corpus sink
@@ -377,11 +377,11 @@ object StreamingPipeline {
     val newSigs = Dedup.signatureTable(cleaned, "doc_id", "clean_text")
       .persist()
     try {
-      // materialize=true: a long-running stream must not accumulate a
-      // persisted pair cache per epoch — compute the (small) verified
-      // pair set eagerly and release every intermediate block
-      val pairs = Dedup.incrementalLshPairs(newSigs, existing,
-        threshold, materialize = true)
+      // the (small) verified pair set comes back pinned with every
+      // intermediate block released; the pin itself is released below
+      // once the dead set and the writes are done, so a long-running
+      // stream holds no per-epoch block
+      val pairs = Dedup.incrementalLshPairs(newSigs, existing, threshold)
       // keeper orientation: the STORE always wins — a stored doc can't
       // be un-appended, so when a pair touches the store the batch
       // member dies regardless of id order (a backfilled batch can
@@ -435,7 +435,7 @@ object StreamingPipeline {
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$sigDir/epoch=$shardId")
         }
-      } finally survivors.unpersist()
+      } finally { survivors.unpersist(); Lineage.unpin(pairs) }
     } finally newSigs.unpersist(blocking = false)
   }
 
@@ -670,7 +670,7 @@ object StreamingPipeline {
       corpusDir: String, sigDir: String, sortKeyDir: String,
       fpDir: String, pairsDir: String, threshold: Double,
       snWindow: Int, maxHamming: Int, shardId: Long): Unit = {
-    import graft.llm.Dedup
+    import graft.llm.{Dedup, Lineage}
     val spark = cleaned0.sparkSession
     // the sig store is the commit record for ALL FOUR stores: only
     // epoch ids whose sig partition committed are read from the
@@ -697,7 +697,8 @@ object StreamingPipeline {
       .persist()
     try {
       val (newSigs, newSk, newFps) = Dedup.prepArtifacts(prep)
-      // eager, cache-released pair probe (the q292 call)
+      // eager, cache-released pair probe (the q292 call); its pin is
+      // released with the survivors below
       val pairs = Dedup.incrementalBlockedDedupPairsFromArtifacts(
         newSigs, newSk, newFps, existingSigs, existingSk, existingFps,
         threshold, snWindow, threshold, maxHamming)
@@ -763,7 +764,7 @@ object StreamingPipeline {
             s"epochs=${pressure.committedEpochs} files=${pressure.dataFiles} " +
             s"bytes=${pressure.bytes} shouldCompact=${shouldCompact(pressure)}")
         }
-      } finally survivors.unpersist()
+      } finally { survivors.unpersist(); Lineage.unpin(pairs) }
     } finally prep.unpersist(blocking = false)
   }
 

@@ -82,11 +82,12 @@ object ProfR19 {
         exec(Dedup.sortedNeighborPairs(docs, "doc_id", "text")) }
       time("q256.simhashPairs") {
         exec(Dedup.simhashPairs(docs, "doc_id", "text")) }
-      val pairs = Dedup.blockedDedupPairs(docs, "doc_id", "text",
-        materialize = false)
+      val (pairs, caches) = Dedup.blockedPairsWithCaches(docs, "doc_id",
+        "text", 0.5, 4, 0.5, 3)
       time("q256.pairs-union(all3,shared)") { exec(pairs) }
       time("q256.dupClusters(pairs)") {
         exec(graft.llm.Corpus.dupClusters(pairs)) }
+      caches.foreach(_.unpersist(blocking = false))
       prep.unpersist(blocking = false)
       whole("q256_blocked_dedup")
       whole("q259_blocked_keepers")
@@ -113,11 +114,9 @@ object ProfR19 {
       time("q292.batch-prep") { prep.count() }
       val (newSigs, newSk, newFps) = Dedup.prepArtifacts(prep)
       time("q292.incr-lsh") {
-        exec(Dedup.incrementalLshPairs(newSigs, sig, 0.5, 4, 6,
-          materialize = true)) }
+        exec(Dedup.incrementalLshPairs(newSigs, sig, 0.5, 4, 6)) }
       time("q292.incr-sn") {
-        exec(Dedup.incrementalSortedNeighborPairs(sk, newSk, 4, 0.5,
-          materialize = true)) }
+        exec(Dedup.incrementalSortedNeighborPairs(sk, newSk, 4, 0.5)) }
       time("q292.incr-simhash") {
         exec(Dedup.incrementalSimhashPairs(newFps, fp, 3)) }
       val delta = time("q292.delta-pairs(all3)") {
@@ -141,9 +140,10 @@ object ProfR19 {
       val base = Dedup.signatureTable(docs, "doc_id", "text").persist()
       time("q262.base") { base.count() }
       base.unpersist(blocking = false)
-      val lazyPlan = Dedup.bbitJaccardEst(docs, "doc_id", "text",
-        materialize = false)
+      val (lazyPlan, caches) = Dedup.bbitJaccardEstWithCaches(docs,
+        "doc_id", "text", 4, 12, 4)
       time("q262.lazy-whole") { exec(lazyPlan) }
+      caches.foreach(_.unpersist(blocking = false))
       whole("q262_bbit_minhash")
     }
 

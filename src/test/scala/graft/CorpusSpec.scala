@@ -409,7 +409,8 @@ class CorpusSpec extends AnyFunSuite {
     val n = 2000
     val pairs = spark.range(0, n - 1)
       .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-    val (labels, rounds) = Corpus.bigStarClusters(pairs, checkpointDir = Some(dir))
+    val (labels, rounds) =
+      TestSpark.withCheckpointDir(dir)(Corpus.bigStarClusters(pairs))
     assert(rounds <= 20)
     // rounds actually wrote reliable checkpoints to the dir
     val written = new java.io.File(dir).listFiles()
@@ -426,9 +427,9 @@ class CorpusSpec extends AnyFunSuite {
     val (viaLocal, _) = Corpus.bigStarClusters(pairs)
     assert(viaLocal.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
       .sameElements(got.map(r => (r.getLong(0), r.getLong(1))).sorted))
-    // dupClusters threads the option through (big-path via byte gate 0)
-    val viaDup = Corpus.dupClusters(pairs, localMaxBytes = 0L,
-      checkpointDir = Some(dir)).collect()
+    // dupClusters pins the same way (big-path via byte gate 0)
+    val viaDup = TestSpark.withCheckpointDir(dir)(
+      Corpus.dupClusters(pairs, localMaxBytes = 0L).collect())
     assert(viaDup.length == n && viaDup.forall(_.getLong(1) == 0L))
   }
 

@@ -307,19 +307,20 @@ class GraphOpsSpec extends AnyFunSuite {
     val before = spark.sparkContext.getCheckpointDir
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq
+    // the reliable path: the context's checkpoint dir set around the call
+    def reliable(df: => org.apache.spark.sql.DataFrame): Seq[String] =
+      TestSpark.withCheckpointDir(dir)(rows(df))
     try {
-      assert(rows(GraphOps.pageRank(edges, "src", "dst", iters = 3,
-        checkpointDir = Some(dir))) ==
+      assert(reliable(GraphOps.pageRank(edges, "src", "dst", iters = 3)) ==
         rows(GraphOps.pageRank(edges, "src", "dst", iters = 3)))
-      assert(rows(GraphOps.labelPropagation(edges, "src", "dst",
-        rounds = 3, checkpointDir = Some(dir))) ==
+      assert(reliable(GraphOps.labelPropagation(edges, "src", "dst",
+        rounds = 3)) ==
         rows(GraphOps.labelPropagation(edges, "src", "dst", rounds = 3)))
-      assert(rows(GraphOps.seedDistances(edges, "src", "dst", seeds, "id",
-        maxHops = 3, checkpointDir = Some(dir))) ==
+      assert(reliable(GraphOps.seedDistances(edges, "src", "dst", seeds,
+        "id", maxHops = 3)) ==
         rows(GraphOps.seedDistances(edges, "src", "dst", seeds, "id",
           maxHops = 3)))
-      assert(rows(GraphOps.hits(edges, "src", "dst", iters = 2,
-        checkpointDir = Some(dir))) ==
+      assert(reliable(GraphOps.hits(edges, "src", "dst", iters = 2)) ==
         rows(GraphOps.hits(edges, "src", "dst", iters = 2)))
       // the reliable path actually WROTE checkpoints
       val wrote = new java.io.File(dir).listFiles()

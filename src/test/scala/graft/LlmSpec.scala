@@ -1614,14 +1614,14 @@ class LlmSpec extends AnyFunSuite {
     val deep = Similarity.kmeansCentroids(emb, k = 8, iters = 10)
     val nodes = deep.queryExecution.analyzed.collect { case p => p }.size
     assert(nodes <= 4, s"analyzed plan has $nodes nodes after 10 rounds")
-    // reliable-checkpoint mode: same centroids, checkpoint files land
-    // under the given dir, and the session's global checkpoint dir is
-    // restored on exit
+    // reliable-checkpoint mode (the context's checkpoint dir set):
+    // same centroids, checkpoint files land under that dir, and the
+    // engine leaves the context's setting as it found it
     val dir = java.nio.file.Files.createTempDirectory("graft-kmeans-ckpt").toString
     def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("cid") -> r.getSeq[Double](1)).toMap
-    val viaCkpt = toMap(Similarity.kmeansCentroids(emb, k = 8, iters = 3,
-      checkpointDir = Some(dir)))
+    val viaCkpt = TestSpark.withCheckpointDir(dir)(
+      toMap(Similarity.kmeansCentroids(emb, k = 8, iters = 3)))
     assert(sc.getCheckpointDir == prev,
       s"global checkpoint dir changed: $prev -> ${sc.getCheckpointDir}")
     assert(new java.io.File(dir).listFiles != null &&
@@ -3192,22 +3192,40 @@ class LlmSpec extends AnyFunSuite {
     assert(keepers.count() == docs.count())
     // the keeper frame is lazy over the eager clusters: nothing pinned
     assert(persisted -- before == Set.empty, "blockedClusterKeepers")
+    val existing = docs.filter(col("doc_id") % 4 =!= 0)
+    val batch = docs.filter(col("doc_id") % 4 === 0)
     for ((name, call) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "lshPairs" -> (() => Dedup.lshPairs(docs, "doc_id", "text")),
+        "lshSurvivors" -> (() => Dedup.lshSurvivors(docs, "doc_id", "text")),
+        "containmentPairs" -> (() =>
+          Dedup.containmentPairs(docs, "doc_id", "text", threshold = 0.5)),
+        "incrementalLshPairs" -> (() => Dedup.incrementalLshPairs(
+          Dedup.signatureTable(batch, "doc_id", "text"),
+          Dedup.signatureTable(existing, "doc_id", "text"))),
+        "bbitJaccardEst" -> (() => Dedup.bbitJaccardEst(docs, "doc_id", "text")),
+        "sortedNeighborPairs" -> (() =>
+          Dedup.sortedNeighborPairs(docs, "doc_id", "text")),
+        "setSimJoinPairs" -> (() =>
+          Dedup.setSimJoinPairs(docs, "doc_id", "text", 0.5)),
+        "incrementalSortedNeighborPairs" -> (() =>
+          Dedup.incrementalSortedNeighborPairs(
+            Dedup.sortKeyTable(existing, "doc_id", "text"),
+            Dedup.sortKeyTable(batch, "doc_id", "text"))),
         "blockedDedupPairs" -> (() => Dedup.blockedDedupPairs(docs, "doc_id", "text")),
-        "incrementalBlockedDedupPairs" -> { () =>
-          val existing = docs.filter(col("doc_id") % 4 =!= 0)
+        "incrementalBlockedDedupPairs" -> (() =>
           Dedup.incrementalBlockedDedupPairs(
             Dedup.signatureTable(existing, "doc_id", "text"),
             Dedup.sortKeyTable(existing, "doc_id", "text"),
             Dedup.simhashTable(existing, "doc_id", "text"),
-            docs.filter(col("doc_id") % 4 === 0), "doc_id", "text")
-        })) {
+            batch, "doc_id", "text")))) {
       val before = persisted
       val result = call()
+      // counted first: a lazily built cache registers its RDD only
+      // when an action runs
+      assert(result.count() > 0, s"$name found no pairs")
       val added = persisted -- before
       assert(added.size == 1 && added == pinned(result),
         s"$name left $added, its result pins ${pinned(result)}")
-      assert(result.count() > 0, s"$name found no pairs")
       added.foreach(id => sc.getPersistentRDDs(id).unpersist(false))
     }
   }
@@ -3374,8 +3392,8 @@ class LlmSpec extends AnyFunSuite {
     added(before).foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist(false))
     val dir = java.nio.file.Files.createTempDirectory("setsim-ckpt").toString
     val before2 = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val reliable = Dedup.setSimJoinPairs(corpus, "doc_id", "text", 0.5,
-      checkpointDir = Some(dir))
+    val reliable = TestSpark.withCheckpointDir(dir)(
+      Dedup.setSimJoinPairs(corpus, "doc_id", "text", 0.5))
     assert(added(before2).isEmpty, s"reliable checkpoint left ${added(before2)}")
     assert(pairMap(reliable) == brute)
   }
@@ -3511,8 +3529,8 @@ class LlmSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      // materialize = true runs the eager checkpoint through
-      // withAction, so the listener sees the pair query's metrics
+      // the eager pin runs through withAction, so the listener sees
+      // the pair query's metrics
       Dedup.setSimJoinPairs(corpus, "doc_id", "text", 0.5,
         hotTokenDf = 2, saltBuckets = 3)
       // listener delivery is async — wait for the prefix observation

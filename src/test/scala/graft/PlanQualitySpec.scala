@@ -184,10 +184,15 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q23 lsh: band join shuffles keys only (no shingle arrays in join)") {
-    val df = Queries.all.find(_.name == "q23_lsh_pairs").get.run(spark, dir)
-    val plan = df.queryExecution.optimizedPlan.toString
-    // the self-join inputs project only id/band columns before exchange
-    assert(plan.contains("band_hash"))
+    // q23's pairs come back pinned; read the lazy plan the pin runs
+    val docs = graft.sources.Tables.load(spark, dir, "documents")
+    val (df, caches) = graft.llm.Dedup.lshPairsWithCaches(docs, "doc_id",
+      "text", 0.5, 12, 4, 6)
+    try {
+      val plan = df.queryExecution.optimizedPlan.toString
+      // the self-join inputs project only id/band columns before exchange
+      assert(plan.contains("band_hash"))
+    } finally caches.foreach(_.unpersist(blocking = false))
   }
 
   test("q100: EXISTS/NOT EXISTS compile to semi+anti joins, never cartesian") {
@@ -916,13 +921,14 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q231 sorted neighbors: rank window banded, offsets broadcast, candidates keyed") {
-    // lazy variant: the gate materializes (localCheckpoint) so its
-    // executed plan is just the pinned-rows scan; the pins below
-    // inspect the plan that materialization RUNS
+    // lazy builder: the gate's pairs are pinned, so its executed plan
+    // is just the pinned-rows scan; the pins below inspect the plan
+    // that the pin RUNS
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val lazyPairs = graft.llm.Dedup.sortedNeighborPairs(
-      docs, "doc_id", "text", materialize = false)
-    val plan = lazyPairs.queryExecution.executedPlan.toString
+    val (lazyPairs, caches) = graft.llm.Dedup.sortedNeighborPairsWithCaches(
+      docs, "doc_id", "text", 4, 0.5, 0)
+    val plan = try lazyPairs.queryExecution.executedPlan.toString
+      finally caches.foreach(_.unpersist(blocking = false))
     assert(!plan.contains("CartesianProduct"), plan.take(3000))
     // the data-sized row_number window must carry the band partition
     // key; only the 2^bandBits-row offset frame may sort unpartitioned
@@ -1106,13 +1112,13 @@ class PlanQualitySpec extends AnyFunSuite {
   test("q256 blocked dedup: unioned pair streams all keyed — no cartesian, no nested loop, pair dedupe aggregates") {
     import org.apache.spark.sql.functions.col
     val docs = graft.sources.Tables.load(spark, dir, "documents")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    // the LAZY composition (what blockedDedupClusters feeds CC):
-    // materialize=false variants so the full candidate machinery of
-    // all three blockers is visible in ONE physical plan
-    val lsh = graft.llm.Dedup.lshPairs(docs, "doc_id", "text")
-    val sn = graft.llm.Dedup.sortedNeighborPairs(docs, "doc_id", "text",
-      materialize = false)
+    // the LAZY composition (what blockedDedupClusters feeds CC): the
+    // lazy builders, so the full candidate machinery of all three
+    // blockers is visible in ONE physical plan
+    val (lsh, lshCaches) = graft.llm.Dedup.lshPairsWithCaches(docs,
+      "doc_id", "text", 0.5, 12, 4, 6)
+    val (sn, snCaches) = graft.llm.Dedup.sortedNeighborPairsWithCaches(docs,
+      "doc_id", "text", 4, 0.5, 0)
     val sim = graft.llm.Dedup.simhashPairs(docs, "doc_id", "text")
     try {
       val pairs = lsh.select(col("id_a"), col("id_b"))
@@ -1129,13 +1135,7 @@ class PlanQualitySpec extends AnyFunSuite {
       assert(plan.linesIterator.exists(l => l.contains("HashAggregate")
         && l.contains("id_a")),
         "pair dedupe must aggregate on the pair key: " + plan.take(4000))
-    } finally {
-      // the lazy variants legitimately pin caches (caller-owned
-      // release contract) — release what this test added
-      spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !before.contains(id) }
-        .values.foreach(_.unpersist(false))
-    }
+    } finally (lshCaches ++ snCaches).foreach(_.unpersist(blocking = false))
   }
 
   test("q257 hybrid indexed: request-path plan — every window query-keyed with group-limit, no cartesian") {
@@ -1230,14 +1230,13 @@ class PlanQualitySpec extends AnyFunSuite {
   test("q274 incremental sorted neighbors (lazy): candidate join keyed on the global-rank probe, no cartesian") {
     import org.apache.spark.sql.functions.col
     val docs = graft.sources.Tables.load(spark, dir, "documents")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (pairs, caches) = graft.llm.Dedup.incrementalSortedNeighborPairsWithCaches(
+      graft.llm.Dedup.sortKeyTable(
+        docs.filter(col("doc_id") % 4 =!= 0), "doc_id", "text"),
+      graft.llm.Dedup.sortKeyTable(
+        docs.filter(col("doc_id") % 4 === 0), "doc_id", "text"),
+      4, 0.5, 0)
     try {
-      val pairs = graft.llm.Dedup.incrementalSortedNeighborPairs(
-        graft.llm.Dedup.sortKeyTable(
-          docs.filter(col("doc_id") % 4 =!= 0), "doc_id", "text"),
-        graft.llm.Dedup.sortKeyTable(
-          docs.filter(col("doc_id") % 4 === 0), "doc_id", "text"),
-        materialize = false)
       val plan = pairs.queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"), plan.take(4000))
       assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(4000))
@@ -1245,11 +1244,7 @@ class PlanQualitySpec extends AnyFunSuite {
         l.contains("Join") && l.contains("gk")).getOrElse("")
       assert(joinLine.nonEmpty,
         "candidate join must key on the rank probe gk: " + plan.take(4000))
-    } finally {
-      spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !before.contains(id) }
-        .values.foreach(_.unpersist(false))
-    }
+    } finally caches.foreach(_.unpersist(blocking = false))
   }
 
   test("q295 markov transitions: lag window user-partitioned, scan pruned to the 4 needed columns") {
@@ -1274,17 +1269,16 @@ class PlanQualitySpec extends AnyFunSuite {
     def leafCount(p: LogicalPlan): Int = p.collectLeaves().size
     // LSH: the band join's PROBE (left) side derives from the batch
     // sigs alone (1 scan); the build side is existing ∪ batch (2).
-    // The verified-pair frame is persisted inside the function, so
-    // the band join lives inside the InMemoryRelation's cached plan —
-    // drill through it (plan inspection runs no action, so the cache
-    // never materializes and there is nothing to release).
-    val lsh = graft.llm.Dedup.incrementalLshPairs(
+    // The lazy builder persists the verified-pair frame, so the band
+    // join lives inside the InMemoryRelation's cached plan — drill
+    // through it (plan inspection runs no action, so the cache never
+    // materializes; its registration is released at once).
+    val (lsh, caches) = graft.llm.Dedup.incrementalLshPairsWithCaches(
       graft.llm.Dedup.signatureTable(batch, "doc_id", "text"),
-      graft.llm.Dedup.signatureTable(existing, "doc_id", "text"),
-      materialize = false)
-    val imr = lsh.queryExecution.optimizedPlan.collectFirst {
+      graft.llm.Dedup.signatureTable(existing, "doc_id", "text"), 0.5, 6)
+    val imr = try lsh.queryExecution.optimizedPlan.collectFirst {
       case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m
-    }
+    } finally caches.foreach(_.unpersist(blocking = false))
     assert(imr.isDefined, "scored-pair CSE cache must exist")
     val cached = imr.get.cachedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -1411,19 +1405,13 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   /** Runs `body` on the lazy set-sim plan of `corpus` and releases the
-    * caches the lazy contract leaves held. */
+    * caches the lazy builder hands back. */
   private def setSimPlan(corpus: org.apache.spark.sql.DataFrame)(
       body: String => Unit): Unit = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try {
-      val pairs = graft.llm.Dedup.setSimJoinPairs(corpus, "doc_id", "text",
-        threshold = 0.5, materialize = false)
-      body(pairs.queryExecution.executedPlan.toString)
-    } finally {
-      spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !before.contains(id) }
-        .values.foreach(_.unpersist(false))
-    }
+    val (pairs, caches) = graft.llm.Dedup.setSimJoinPairsWithCaches(corpus,
+      "doc_id", "text", 0.5, 16384, 8)
+    try body(pairs.queryExecution.executedPlan.toString)
+    finally caches.foreach(_.unpersist(blocking = false))
   }
 
   test("q278 set-sim join (lazy): the low-diversity documents corpus verifies length-compatible pairs in one nested-loop join, no window, no candidate shuffle") {

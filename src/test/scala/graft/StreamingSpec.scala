@@ -303,6 +303,36 @@ class StreamingSpec extends AnyFunSuite {
     } finally StreamingPipeline.failpoint = _ => ()
   }
 
+  test("an admitted epoch releases its pair pin: both admission paths leave the persisted RDDs as they found them") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-admit-pins").toString
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet.toSet
+    // three C4-surviving lines each; doc 3 copies doc 1, so each epoch
+    // verifies one pair, kills doc 3 and writes the two survivors
+    val text1 = "the quick brown fox jumps over fences.\nmorning rain fell on the quiet harbor town!\nseven sailors counted stars above deck?"
+    val text2 = "bakers knead dough before sunrise daily.\ncopper kettles whistle in the old kitchen!\nchildren chase autumn leaves down lanes?"
+    val raw = Seq((1L, text1), (2L, text2), (3L, text1))
+      .toDF("doc_id", "text").withColumn("source", lit("keep"))
+    // single-probe LSH admission (startCorpusIngest's epoch body)
+    val before = persisted
+    StreamingPipeline.corpusIngestBatch(raw, s"$base/lsh/corpus",
+      s"$base/lsh/sig", Map("keep" -> 1.0), 1.0, 0.5)
+    assert(persisted == before, s"LSH admission left ${persisted -- before}")
+    assert(StreamingPipeline.readCorpus(spark, s"$base/lsh/corpus")
+      .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+    // three-blocker admission (startBlockedCorpusIngest's epoch body)
+    val before2 = persisted
+    StreamingPipeline.blockedAdmitBatch(
+      raw.withColumnRenamed("text", "clean_text"), s"$base/b/corpus",
+      s"$base/b/sig", s"$base/b/sk", s"$base/b/fp", s"$base/b/pairs",
+      0.5, 4, 3, 0L)
+    assert(persisted == before2,
+      s"blocked admission left ${persisted -- before2}")
+    assert(spark.read.parquet(s"$base/b/pairs").select("id_a", "id_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 3L)))
+  }
+
   test("compactBlockedStores: one generation per store, views identical, probe-equivalent, torn compaction invisible") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft-compact").toString

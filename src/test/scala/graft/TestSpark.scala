@@ -23,4 +23,22 @@ object TestSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the shared context's checkpoint dir set to `dir`
+    * — the deployment setting [[graft.llm.Lineage.pin]] reads, so every
+    * pin inside `body` is a reliable checkpoint under `dir` — asserts
+    * the engine left that setting as it found it, and restores the
+    * previous setting afterwards (unset when it was unset). */
+  def withCheckpointDir[T](dir: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getCheckpointDir
+    sc.setCheckpointDir(dir)
+    try {
+      val set = sc.getCheckpointDir
+      val out = body
+      assert(sc.getCheckpointDir == set,
+        s"the engine changed the checkpoint dir: $set -> ${sc.getCheckpointDir}")
+      out
+    } finally sc.setCheckpointDir(prev.orNull)
+  }
 }
